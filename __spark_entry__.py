@@ -1387,7 +1387,8 @@ def _minhash_sig_cte(num_hashes: int, shingle_n: int) -> str:
 
 
 def _band_cte(num_hashes: int, bands: int) -> str:
-    """Band-hash SELECTs over the sig CTE (ops.dedup._banded replay)."""
+    """Band-hash SELECTs over the sig CTE (replays ops.dedup._banded:
+    _band_array's band hashes, exploded by _bands)."""
     rows = num_hashes // bands
     band_selects = []
     for b in range(bands):

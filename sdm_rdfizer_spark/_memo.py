@@ -21,11 +21,8 @@ class BoundedMemo(dict):
         super().__init__()
         self._maxsize = maxsize
 
-    def get(self, key, default=None):
-        try:
-            value = super().__getitem__(key)
-        except KeyError:
-            return default
+    def __getitem__(self, key):
+        value = super().__getitem__(key)
         # refresh recency (delete + reinsert moves to the ordered end);
         # tolerate a concurrent eviction of the same key
         try:
@@ -34,6 +31,12 @@ class BoundedMemo(dict):
             pass
         super().__setitem__(key, value)
         return value
+
+    def get(self, key, default=None):
+        try:
+            return self[key]
+        except KeyError:
+            return default
 
     def __setitem__(self, key, value) -> None:
         try:

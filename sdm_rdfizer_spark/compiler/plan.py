@@ -442,8 +442,8 @@ class MappingPlanner:
     # unchanged — at warehouse scale a document that big should be JSONL
     # feeding the splittable line path, not a checkpoint.
     def _json_scan(self, ls) -> "DataFrame":
-        from ..sources import (
-            _stage_remote, apply_json_iterator, json_base, source_bytes)
+        from ..sources import (_stage_remote, _staged_path,
+                               apply_json_iterator, json_base, source_bytes)
 
         # remote (HTTP) documents stage to a local file first, exactly as
         # read_source does — spark.read.json cannot list an http:// path
@@ -456,13 +456,12 @@ class MappingPlanner:
             # http(s) sources the staged local path never equals the
             # raw source string, so comparing against t.source.source
             # undercounted exactly the multi-reader remote case the
-            # checkpoint gate targets (_stage_remote is a pass-through
-            # for local paths and an existence probe — never a second
-            # download — for already-staged URLs)
+            # checkpoint gate targets. _staged_path only computes the
+            # path, so planning never downloads another TM's source.
             n_readers = sum(
                 1 for t in self.tms
                 if t.source.fmt == "json"
-                and _stage_remote(str(t.source.source)) == src)
+                and _staged_path(str(t.source.source)) == src)
             gate_mb = int(os.environ.get("SDM_JSON_CKPT_MAX_MB", "512"))
             nbytes = source_bytes(src)
             if n_readers > 1 and 0 <= nbytes <= gate_mb * (1 << 20):

@@ -13,6 +13,7 @@ compose further or write via sinks).
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -124,6 +125,26 @@ def tune_session(spark: SparkSession) -> SparkSession:
             pass
     spark._sdm_tuned = token
     return spark
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, conf: dict[str, str]):
+    """Set the session ``conf`` entries for the body of a ``with``
+    block. On exit every key gets back the value it had before, and a
+    key that was unset before is unset again — a drain or op must leave
+    the session conf as it found it for the queries that run after it
+    on the same session."""
+    prev = {k: spark.conf.get(k, None) for k in conf}
+    try:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def default_session(app: str = "sdm-rdfizer-spark", cpus: str | int = "*",

@@ -24,7 +24,7 @@ Design notes for 100 TB scale:
 
 from __future__ import annotations
 
-from functools import lru_cache
+from functools import lru_cache, partial
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame
@@ -200,7 +200,8 @@ def minhash_doc_index(
 ) -> DataFrame:
     """One-pass per-document LSH index row ``(id, __sh, __bands)``:
     the xxhash64 shingle fingerprints (``shingle_fingerprints``) plus
-    the banded MinHash hashes (``minhash_signatures`` + ``_banded``),
+    the banded MinHash hashes (``minhash_signatures`` + ``_banded``, the
+    same ``_band_array`` over the row-wise ``_row_minhashes``),
     computed ENTIRELY IN-ROW — no explode, no aggregation shuffle.
 
     Provably equal to the explode+groupBy composition:
@@ -212,9 +213,9 @@ def minhash_doc_index(
     * per seed, ``array_min`` over ``md5(seed| · )`` of that multiset
       equals the groupBy ``min()`` over its exploded rows (same strings,
       same binary UTF8 ordering, min is multiset-insensitive);
-    * band hashes combine the same ``mh{i}`` values in the same order
-      as ``_banded`` (``md5(concat_ws('|', …))``; an all-NULL signature
-      — NULL text — yields ``md5('')`` bands in both paths because
+    * band hashes are the same ``_band_array`` over the same ``mh{i}``
+      values in the same order (``md5(concat_ws('|', …))``; an all-NULL
+      signature — NULL text — yields ``md5('')`` bands in both paths because
       ``min(NULL)=NULL`` and ``concat_ws`` skips NULLs);
     * ``__sh`` is ``array_distinct`` of ``xxhash64`` over the same
       multiset — exactly ``shingle_fingerprints``.
@@ -226,8 +227,8 @@ def minhash_doc_index(
     materialization job and three. The batch corpus-scale pipelines
     keep the codegen explode path (HOF lambdas are interpreted — see
     ``shingles``); at micro-batch sizes latency is job-count-bound, not
-    CPU-bound, so in-row wins. ``__bands`` is ``array<struct<band,bh>>``
-    — ``explode`` yields exactly the ``_banded`` frame."""
+    CPU-bound, so in-row wins. ``__bands`` is the ``_band_array``
+    column, so ``_bands`` over it yields exactly the ``_banded`` frame."""
     shs, fp, band_arr = _doc_index_exprs(num_hashes, bands, shingle_n)
     return (df.select(F.col(id_col), words(text_col).alias("__w"))
             .select(F.col(id_col), shs.alias("__shs"))
@@ -244,29 +245,31 @@ def _doc_index_exprs(num_hashes: int, bands: int, shingle_n: int):
     and building them costs ~50 py4j round trips, which a per-trigger
     caller (the streaming verify: one build per micro-batch) should
     pay once per process, not once per trigger."""
-    rows_per_band = num_hashes // bands
     shs = F.transform(
         F.sequence(F.lit(0),
                    F.greatest(F.size("__w") - shingle_n, F.lit(0))),
         lambda i: F.array_join(F.slice("__w", i + 1, shingle_n), " "))
-
-    def _mh(seed: int):
-        # one-arg lambda on purpose: a two-arg transform lambda receives
-        # (element, array-index) and the index would shadow the seed
-        return F.array_min(F.transform(
-            "__shs", lambda s: F.md5(F.concat(F.lit(f"{seed}|"), s))))
-
-    mh = [_mh(i) for i in range(num_hashes)]
-    band_arr = F.array(*[
-        F.struct(
-            F.lit(b).alias("band"),
-            F.md5(F.concat_ws(
-                "|", *mh[b * rows_per_band:(b + 1) * rows_per_band]))
-            .alias("bh"))
-        for b in range(bands)
-    ])
+    band_arr = _band_array(_row_minhashes("__shs", num_hashes), bands)
     fp = F.array_distinct(F.transform("__shs", lambda s: F.xxhash64(s)))
     return shs, fp, band_arr
+
+
+def _mh(seed: int, shingle) -> Column:
+    """The seeded MinHash term ``md5('<seed>|' || shingle)`` — the one
+    hash family every signature (batch groupBy, row-wise, streaming)
+    is built from."""
+    return F.md5(F.concat(F.lit(f"{seed}|"), shingle))
+
+
+def _row_minhashes(arr: str, num_hashes: int) -> list[Column]:
+    """Row-wise MinHash signature over the shingle-array column ``arr``:
+    per seed, ``array_min`` of ``_mh`` over the array — the in-row twin
+    of ``minhash_signatures``' groupBy ``min()``. ``partial`` binds the
+    seed so the lambda stays one-argument: a two-argument transform
+    lambda receives (element, array-index) and the index would shadow
+    the seed."""
+    return [F.array_min(F.transform(arr, partial(_mh, i)))
+            for i in range(num_hashes)]
 
 
 def minhash_signatures(
@@ -295,10 +298,8 @@ def minhash_signatures(
     # interpreted array_distinct cost) is dead weight here
     exploded = shingle_rows(df, text_col, id_col, shingle_n=shingle_n,
                             carry_cols=carry_cols)
-    aggs = [
-        F.min(F.md5(F.concat(F.lit(f"{i}|"), F.col("shingle")))).alias(f"mh{i}")
-        for i in range(num_hashes)
-    ]
+    aggs = [F.min(_mh(i, F.col("shingle"))).alias(f"mh{i}")
+            for i in range(num_hashes)]
     return exploded.groupBy(id_col, *carry_cols).agg(*aggs)
 
 
@@ -320,50 +321,78 @@ def _sig_groups(sig: DataFrame, id_col: str, num_hashes: int) -> DataFrame:
     return mem.join(grp, "__gk").select(F.col(id_col), F.col("__cid"))
 
 
+def _band_array(mh: list[Column], bands: int) -> Column:
+    """``array<struct<band, bh>>``: the signature ``mh`` split into
+    ``bands`` bands of ``len(mh)/bands`` rows, each band hashed as
+    ``md5(concat_ws('|', …))`` — the LSH bucket key."""
+    rows = len(mh) // bands
+    return F.array(*[
+        F.struct(F.lit(b).alias("band"),
+                 F.md5(F.concat_ws("|", *mh[b * rows:(b + 1) * rows]))
+                 .alias("bh"))
+        for b in range(bands)
+    ])
+
+
+def _bands(df: DataFrame, id_col: str, arr,
+           carry_cols: tuple[str, ...] = ()) -> DataFrame:
+    """(id, *carry_cols, band, bh) frame: one row per element of the
+    band array ``arr`` (a ``_band_array`` Column, or a stored column of
+    one) — the input of every ``_band_pairs`` join."""
+    carry = [F.col(c) for c in carry_cols]
+    return (df.select(F.col(id_col), *carry, F.explode(arr).alias("b"))
+            .select(id_col, *carry_cols,
+                    F.col("b.band").alias("band"), F.col("b.bh").alias("bh")))
+
+
 def _banded(sig: DataFrame, id_col: str, num_hashes: int,
             bands: int, carry_cols: tuple[str, ...] = ()) -> DataFrame:
-    """(id, band, bh) frame: the signature split into ``bands`` band
-    hashes — the LSH bucket key both the self-join and the cross-corpus
-    similarity join shuffle on. ``carry_cols`` pass through per-doc
-    payload columns already present on ``sig``."""
-    rows_per_band = num_hashes // bands
-    band_cols = []
-    for b in range(bands):
-        members = [F.col(f"mh{b * rows_per_band + r}") for r in range(rows_per_band)]
-        band_cols.append(
-            F.struct(F.lit(b).alias("band"), F.md5(F.concat_ws("|", *members)).alias("bh"))
-        )
-    carry = [F.col(c) for c in carry_cols]
-    return sig.select(F.col(id_col), *carry,
-                      F.explode(F.array(*band_cols)).alias("b")) \
-              .select(id_col, *carry_cols,
-                      F.col("b.band").alias("band"), F.col("b.bh").alias("bh"))
+    """``_bands`` of a ``minhash_signatures`` frame (``mh0…`` columns).
+    ``carry_cols`` pass through per-doc payload columns already present
+    on ``sig``."""
+    mh = [F.col(f"mh{i}") for i in range(num_hashes)]
+    return _bands(sig, id_col, _band_array(mh, bands), carry_cols)
 
 
-def _band_pair_join(
-    sig: DataFrame,
-    id_col: str,
-    num_hashes: int,
-    bands: int,
-) -> DataFrame:
-    """Banding self-join over a signature frame → (id_a, id_b,
+def _band_pairs(left: DataFrame, right: DataFrame, cond, keys) -> DataFrame:
+    """The one LSH candidate join: two ``_bands`` frames, aliased ``l``
+    and ``r``, equi-joined on (band, bh) plus the optional predicate
+    ``cond``, grouped by ``keys`` (Columns over ``l.``/``r.``) to one row
+    per pair with its ``n_shared_bands`` agreement count. Every MinHash
+    candidate generator — the batch self-join, the cross-corpus join,
+    the source matrix and the streaming trigger — is this join with its
+    own predicate and pair keys."""
+    on = ((F.col("l.band") == F.col("r.band"))
+          & (F.col("l.bh") == F.col("r.bh")))
+    if cond is not None:
+        on = on & cond
+    return (left.alias("l").join(right.alias("r"), on)
+            .groupBy(*keys).agg(F.count(F.lit(1)).alias("n_shared_bands")))
+
+
+def _self_pairs(banded: DataFrame, id_col: str, *keys) -> DataFrame:
+    """``_band_pairs`` self-join of one band frame: (id_a, id_b, *keys,
     n_shared_bands) with id_a < id_b."""
-    banded = _banded(sig, id_col, num_hashes, bands)
-    left = banded.alias("l")
-    right = banded.alias("r")
-    return (
-        left.join(
-            right,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.bh") == F.col("r.bh"))
-            & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
-        )
-        .groupBy(
-            F.col(f"l.{id_col}").alias("id_a"),
-            F.col(f"r.{id_col}").alias("id_b"),
-        )
-        .agg(F.count(F.lit(1)).alias("n_shared_bands"))
-    )
+    a, b = F.col(f"l.{id_col}"), F.col(f"r.{id_col}")
+    return _band_pairs(banded, banded, a < b,
+                       [a.alias("id_a"), b.alias("id_b"), *keys])
+
+
+def _exact_first(df: DataFrame, text_col: str, id_col: str, *,
+                 num_hashes: int, bands: int,
+                 shingle_n: int) -> tuple[DataFrame, DataFrame]:
+    """(mem, canon_pairs): the signature-group member map
+    (``_sig_groups``) and the banding pairs among group canonicals only.
+    The signature is checkpointed eagerly because it feeds the group
+    map, the canonical join AND the callers' expansion — without it the
+    shingle explosion would recompute once per consumer."""
+    sig = minhash_signatures(df, text_col, id_col,
+                             num_hashes=num_hashes,
+                             shingle_n=shingle_n).localCheckpoint(eager=True)
+    mem = _sig_groups(sig, id_col, num_hashes)
+    canon_ids = mem.where(F.col(id_col) == F.col("__cid")).select(id_col)
+    canon = _banded(sig.join(canon_ids, id_col), id_col, num_hashes, bands)
+    return mem, _self_pairs(canon, id_col)
 
 
 def source_overlap_matrix(
@@ -402,23 +431,10 @@ def source_overlap_matrix(
                              num_hashes=num_hashes, shingle_n=shingle_n,
                              carry_cols=("__g",))
     banded = _banded(sig, id_col, num_hashes, bands, carry_cols=("__g",))
-    left, right = banded.alias("l"), banded.alias("r")
-    pairs = (
-        left.join(
-            right,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.bh") == F.col("r.bh"))
-            & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
-        )
-        .groupBy(
-            F.col(f"l.{id_col}").alias("id_a"),
-            F.col(f"r.{id_col}").alias("id_b"),
-            F.least("l.__g", "r.__g").alias("group_a"),
-            F.greatest("l.__g", "r.__g").alias("group_b"),
-        )
-        .agg(F.count(F.lit(1)).alias("__nsb"))
-        .where(F.col("__nsb") >= min_shared_bands)
-    )
+    pairs = (_self_pairs(banded, id_col,
+                         F.least("l.__g", "r.__g").alias("group_a"),
+                         F.greatest("l.__g", "r.__g").alias("group_b"))
+             .where(F.col("n_shared_bands") >= min_shared_bands))
     return pairs.groupBy("group_a", "group_b").agg(
         F.count(F.lit(1)).cast("long").alias("n_pairs"))
 
@@ -453,18 +469,12 @@ def minhash_lsh_pairs(
     ``neardup_canonical_exact_first`` skips the expansion entirely and
     stays linear.
     """
-    sig = minhash_signatures(df, text_col, id_col,
-                             num_hashes=num_hashes, shingle_n=shingle_n)
     if not exact_first:
-        return _band_pair_join(sig, id_col, num_hashes, bands)
-    # eager checkpoint: sig feeds the group map, the collapsed join AND
-    # the expansion — without it the shingle explosion would recompute
-    # once per consumer
-    sig = sig.localCheckpoint(eager=True)
-    mem = _sig_groups(sig, id_col, num_hashes)
-    canon_ids = mem.where(F.col(id_col) == F.col("__cid")).select(id_col)
-    canon = _band_pair_join(sig.join(canon_ids, id_col),
-                            id_col, num_hashes, bands)
+        sig = minhash_signatures(df, text_col, id_col,
+                                 num_hashes=num_hashes, shingle_n=shingle_n)
+        return _self_pairs(_banded(sig, id_col, num_hashes, bands), id_col)
+    mem, canon = _exact_first(df, text_col, id_col, num_hashes=num_hashes,
+                              bands=bands, shingle_n=shingle_n)
     a = mem.select(F.col(id_col).alias("__ma"), F.col("__cid").alias("__ca"))
     b = mem.select(F.col(id_col).alias("__mb"), F.col("__cid").alias("__cb"))
     cross = (
@@ -574,13 +584,9 @@ def _neardup_overrides(
       (``comp`` ids are canonical ids, the member branch requires
       ``id != __cid``), so the left join stays 1:1.
     """
-    sig = minhash_signatures(df, text_col, id_col,
-                             num_hashes=num_hashes,
-                             shingle_n=shingle_n).localCheckpoint(eager=True)
-    mem = _sig_groups(sig, id_col, num_hashes)
-    canon_ids = mem.where(F.col(id_col) == F.col("__cid")).select(id_col)
-    canon_pairs = _band_pair_join(sig.join(canon_ids, id_col),
-                                  id_col, num_hashes, bands)
+    mem, canon_pairs = _exact_first(df, text_col, id_col,
+                                    num_hashes=num_hashes, bands=bands,
+                                    shingle_n=shingle_n)
     # canon_pairs ends in the banding groupBy(id_a, id_b) — one row per
     # pair by construction, so the edge-list distinct would be a wasted
     # shuffle (see neardup_components.dedupe_edges)
@@ -965,6 +971,48 @@ def cap_candidates_per_doc(
     return capped
 
 
+def _bound(pairs: DataFrame, min_shared_bands: int, cap: int | None, *,
+           barrier: bool = True, **cap_kw) -> DataFrame:
+    """The bounded-candidate contract shared by every verify stage:
+    the ``min_shared_bands`` floor on the banding join's agreement count,
+    then the per-doc cap (``cap_candidates_per_doc`` with ``cap_kw``).
+
+    The bounded frame feeds the id semi-joins AND the verify join base,
+    so without a lineage cut the candidate-generation subtree (an LSH
+    banding join) would recompute per consumer. The cap's own single
+    checkpoint is that barrier — the candidate subtree is computed once
+    into it and every consumer reads the kept filter over its blocks —
+    so only an uncapped frame takes an eager checkpoint here, and only
+    when ``barrier`` says a multi-consumer stage follows."""
+    if min_shared_bands > 1:
+        pairs = pairs.where(F.col("n_shared_bands") >= min_shared_bands)
+    if cap is not None:
+        return cap_candidates_per_doc(pairs, cap, **cap_kw)
+    return pairs.localCheckpoint(eager=True) if barrier else pairs
+
+
+def _jaccard(pairs: DataFrame, a: DataFrame, b: DataFrame,
+             threshold: float | None = None) -> DataFrame:
+    """``pairs`` plus the exact per-pair set ``jaccard``: ``a`` and ``b``
+    are (id, array) frames attached to the pair's first and second
+    column, and each pair costs one in-row ``array_intersect``
+    (|A∩B| / |A∪B|, rounded to 6 places; two empty sets score 0).
+    ``threshold`` keeps pairs with ``jaccard >= threshold`` when given.
+
+    Per-pair verify stays an ARRAY intersection — one row per pair,
+    array ops in-row. (An index-join variant — pair frame joined
+    against exploded (id, element) rows — fans out Σ_pairs·|A| rows and
+    measured 608 s vs ~150 s at sf10: right shape for the all-pairs
+    measure, wrong shape when the pairs are already enumerated.)"""
+    ka, kb = pairs.columns[:2]
+    joined = pairs.join(a.toDF(ka, "__sha"), ka).join(b.toDF(kb, "__shb"), kb)
+    inter = F.size(F.array_intersect("__sha", "__shb"))
+    union = F.size("__sha") + F.size("__shb") - inter
+    jac = F.round(inter / F.greatest(union, F.lit(1)), 6)
+    out = joined.select(*pairs.columns, jac.alias("jaccard"))
+    return out if threshold is None else out.where(F.col("jaccard") >= threshold)
+
+
 def jaccard_verify_pairs(
     df: DataFrame,
     pairs: DataFrame,
@@ -1003,58 +1051,31 @@ def jaccard_verify_pairs(
     100 TB: use ``neardup_canonical_exact_first``/``dedup_filter``
     (linear output) for dedup and reserve pair-verify for audit samples.
     """
-    if min_shared_bands > 1:
-        if "n_shared_bands" not in pairs.columns:
-            raise ValueError(
-                "jaccard_verify_pairs: min_shared_bands>1 needs the "
-                "n_shared_bands column (minhash_lsh_pairs emits it)")
-        pairs = pairs.where(F.col("n_shared_bands") >= min_shared_bands)
-    # the pair frame feeds the id semi-join (twice) AND the verify join
-    # base — without cutting lineage the candidate-generation subtree
-    # (typically an LSH banding join) would recompute three times. When
-    # the cap follows, its OWN single checkpoint is that barrier (the
-    # candidate subtree is computed exactly once into it and every
-    # consumer reads the capped filter over its blocks — r11), so a
-    # pre-checkpoint here would just add a redundant materialization job.
-    if max_candidates_per_doc is not None:
-        pairs = cap_candidates_per_doc(
-            pairs, max_candidates_per_doc,
-            log_context="jaccard_verify_pairs", log_drops=log_drops,
-            salt=cap_salt)
-    else:
-        pairs = pairs.localCheckpoint(eager=True)
+    if min_shared_bands > 1 and "n_shared_bands" not in pairs.columns:
+        raise ValueError(
+            "jaccard_verify_pairs: min_shared_bands>1 needs the "
+            "n_shared_bands column (minhash_lsh_pairs emits it)")
+    pairs = _bound(pairs, min_shared_bands, max_candidates_per_doc,
+                   log_context="jaccard_verify_pairs", log_drops=log_drops,
+                   salt=cap_salt)
     ids = (
         pairs.select(F.col("id_a").alias(id_col))
         .union(pairs.select(F.col("id_b").alias(id_col)))
         .distinct()
     )
-    # Per-pair verify stays an ARRAY intersection — one row per pair,
-    # array ops in-row. (An index-join variant — pair frame joined
-    # against exploded (id, fingerprint) rows — fans out Σ_pairs·|A|
-    # rows and measured 608 s vs ~150 s here at sf10: right shape for
-    # the all-pairs measure, wrong shape when the pairs are already
-    # enumerated.) The arrays hold 64-bit xxhash64 FINGERPRINTS, built
-    # in-row: long elements take array_distinct/array_intersect down
-    # the primitive fast path (string arrays pay O(k²) object compares
-    # inside the interpreted HOF subtree), and the id-keyed joins move
-    # 8-byte elements instead of shingle text. A verify-false-positive
-    # needs two distinct shingles of the SAME pair to collide on one
-    # 64-bit hash (P ≈ pairs·|A|²·2⁻⁶⁴ — negligible; the sf0.01 oracle
-    # compares against the true string measure). NULL-text docs hash to
-    # one seed value per doc, reproducing the string path's
-    # "[NULL] ∩ [NULL] matches" edge exactly.
+    # The arrays hold 64-bit xxhash64 FINGERPRINTS, built in-row: long
+    # elements take array_distinct/array_intersect down the primitive
+    # fast path (string arrays pay O(k²) object compares inside the
+    # interpreted HOF subtree), and the id-keyed joins move 8-byte
+    # elements instead of shingle text. A verify-false-positive needs
+    # two distinct shingles of the SAME pair to collide on one 64-bit
+    # hash (P ≈ pairs·|A|²·2⁻⁶⁴ — negligible; the sf0.01 oracle compares
+    # against the true string measure). NULL-text docs hash to one seed
+    # value per doc, reproducing the string path's "[NULL] ∩ [NULL]
+    # matches" edge exactly.
     docs = shingle_fingerprints(df.join(ids, id_col), text_col, id_col,
                                 shingle_n=shingle_n)
-    a = docs.select(F.col(id_col).alias("id_a"), F.col("__sh").alias("__sha"))
-    b = docs.select(F.col(id_col).alias("id_b"), F.col("__sh").alias("__shb"))
-    joined = pairs.select("id_a", "id_b").join(a, "id_a").join(b, "id_b")
-    inter = F.size(F.array_intersect("__sha", "__shb"))
-    union = F.size("__sha") + F.size("__shb") - inter
-    jac = F.round(inter / F.greatest(union, F.lit(1)), 6)
-    out = joined.select("id_a", "id_b", jac.alias("jaccard"))
-    if threshold is not None:
-        out = out.where(F.col("jaccard") >= threshold)
-    return out
+    return _jaccard(pairs.select("id_a", "id_b"), docs, docs, threshold)
 
 
 def adaptive_n_planes(n_vectors: int, *, target_occupancy: int = 8,
@@ -1949,51 +1970,29 @@ def minhash_lsh_join(
                               num_hashes=num_hashes, shingle_n=shingle_n)
     rsig = minhash_signatures(right, text_col, id_col,
                               num_hashes=num_hashes, shingle_n=shingle_n)
-    lb = _banded(lsig, id_col, num_hashes, bands).alias("l")
-    rb = _banded(rsig, id_col, num_hashes, bands).alias("r")
-    cand = (
-        lb.join(rb, (F.col("l.band") == F.col("r.band"))
-                & (F.col("l.bh") == F.col("r.bh")))
-        .groupBy(
-            F.col(f"l.{id_col}").alias("left_id"),
-            F.col(f"r.{id_col}").alias("right_id"),
-        )
-        .agg(F.count(F.lit(1)).alias("n_shared_bands"))
-    )
-    if min_shared_bands > 1:
-        cand = cand.where(F.col("n_shared_bands") >= min_shared_bands)
-    if threshold is None and max_candidates_per_doc is None:
-        return cand
-    # verify stage: candidate pairs feed two id semi-joins and the
-    # verify join base — checkpoint so the banding join runs once; when
-    # the cap follows, its own single checkpoint is that barrier (r11)
-    if max_candidates_per_doc is not None:
-        cand = cap_candidates_per_doc(
-            cand, max_candidates_per_doc, a_col="left_id", b_col="right_id",
-            log_context="minhash_lsh_join", log_drops=log_drops,
-            salt=cap_salt)
-    else:
-        cand = cand.localCheckpoint(eager=True)
+    cand = _band_pairs(
+        _banded(lsig, id_col, num_hashes, bands),
+        _banded(rsig, id_col, num_hashes, bands), None,
+        [F.col(f"l.{id_col}").alias("left_id"),
+         F.col(f"r.{id_col}").alias("right_id")])
+    cand = _bound(cand, min_shared_bands, max_candidates_per_doc,
+                  barrier=threshold is not None,
+                  a_col="left_id", b_col="right_id",
+                  log_context="minhash_lsh_join", log_drops=log_drops,
+                  salt=cap_salt)
     if threshold is None:
         return cand
 
-    def _shs(df: DataFrame, out_id: str, out_sh: str) -> DataFrame:
-        ids = cand.select(F.col(out_id).alias(id_col)).distinct()
-        return (shingle_sets(df.join(ids, id_col), text_col, id_col,
-                             shingle_n=shingle_n)
-                .select(F.col(id_col).alias(out_id),
-                        F.col("sh").alias(out_sh)))
+    # shingle STRING sets, not fingerprints: a NULL-text doc has an
+    # empty set here, so NULL∩NULL scores 0 (its fingerprint array would
+    # be the one seed value and score 1.0)
+    def _shs(df: DataFrame, side: str) -> DataFrame:
+        ids = cand.select(F.col(side).alias(id_col)).distinct()
+        return shingle_sets(df.join(ids, id_col), text_col, id_col,
+                            shingle_n=shingle_n)
 
-    joined = (cand.join(_shs(left, "left_id", "__shl"), "left_id")
-                  .join(_shs(right, "right_id", "__shr"), "right_id"))
-    inter = F.size(F.array_intersect("__shl", "__shr"))
-    union = F.size("__shl") + F.size("__shr") - inter
-    jac = F.round(inter / F.greatest(union, F.lit(1)), 6)
-    return (
-        joined.select("left_id", "right_id", "n_shared_bands",
-                      jac.alias("jaccard"))
-        .where(F.col("jaccard") >= threshold)
-    )
+    return _jaccard(cand, _shs(left, "left_id"), _shs(right, "right_id"),
+                    threshold)
 
 
 def bloom_decontaminate(

@@ -20,11 +20,11 @@ from ._memo import BoundedMemo
 from .ir import LogicalSource
 
 
-def _stage_remote(source: str) -> str:
-    """Download an http(s) source to a local staging file (the reference
-    reads CSV/JSON/XML over HTTP eagerly, semantify.py:10225-10231,
-    6907-6908, 3910-3912). file:// URLs unwrap; anything else passes
-    through. Staged once per URL per host (content-hash keyed path)."""
+def _staged_path(source: str) -> str:
+    """The local path ``source`` is read from, computed without any I/O:
+    file:// URLs unwrap, http(s) URLs map to their staging file (keyed by
+    the md5 of the URL, so once per URL per host), anything else passes
+    through."""
     if "://" not in source:
         return source
     scheme = source.split("://", 1)[0].lower()
@@ -33,17 +33,26 @@ def _stage_remote(source: str) -> str:
     if scheme in ("http", "https"):
         import hashlib
         import tempfile
-        import urllib.request
 
-        stage_dir = os.path.join(tempfile.gettempdir(), "sdm_rdfizer_stage")
-        os.makedirs(stage_dir, exist_ok=True)
         name = hashlib.md5(source.encode()).hexdigest() + "_" + \
             os.path.basename(source.split("?", 1)[0])
-        dest = os.path.join(stage_dir, name)
-        if not os.path.exists(dest):
-            urllib.request.urlretrieve(source, dest)  # noqa: S310
-        return dest
+        return os.path.join(tempfile.gettempdir(), "sdm_rdfizer_stage", name)
     return source
+
+
+def _stage_remote(source: str) -> str:
+    """Download an http(s) source to its ``_staged_path`` unless it is
+    already there (the reference reads CSV/JSON/XML over HTTP eagerly,
+    semantify.py:10225-10231, 6907-6908, 3910-3912) and return the local
+    path to read."""
+    dest = _staged_path(source)
+    if source.lower().startswith(("http://", "https://")) \
+            and not os.path.exists(dest):
+        import urllib.request
+
+        os.makedirs(os.path.dirname(dest), exist_ok=True)
+        urllib.request.urlretrieve(source, dest)  # noqa: S310
+    return dest
 
 
 def read_source(spark: SparkSession, ls: LogicalSource) -> DataFrame:

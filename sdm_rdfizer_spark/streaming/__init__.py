@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..compiler.plan import MappingPlanner
+from ..engine import scoped_conf, tune_session
 from ..ir import LogicalSource, TriplesMap
 from ..sources import read_parquet, read_source
 
@@ -137,7 +138,6 @@ def materialize_stream(
     ``dropDuplicatesWithinWatermark`` after attaching an event-time
     column, when the source has one.
     """
-    from ..engine import tune_session
     from ..rml_parser import extract_triples_maps
     from ..turtle import parse as parse_turtle
 
@@ -211,7 +211,6 @@ def run_available_now(
         derived = max(1, min(par, int(input_bytes // (128 << 10)) + 1))
     state_parts = os.environ.get("SDM_STREAM_STATE_PARTITIONS") or str(
         derived)
-    prev = spark.conf.get("spark.sql.shuffle.partitions", None)
     writer = (
         sdf.writeStream.format("memory")
         .queryName(name)
@@ -220,26 +219,25 @@ def run_available_now(
     )
     if checkpoint_dir:
         writer = writer.option("checkpointLocation", checkpoint_dir)
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", state_parts)
-        q = writer.start()
-        q.awaitTermination()
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": state_parts}):
+        writer.start().awaitTermination()
     return spark.table(name)
 
 
 def _src_bytes(path: str) -> int | None:
     """Input size for run_available_now's state-partition derivation
-    (file or directory); None when it cannot be cheaply determined."""
+    (file or directory); None when it cannot be cheaply determined —
+    including a walk that finds no files (``s3://``/``hdfs://`` paths),
+    so an unsizable input falls back to the core count, never to one
+    partition."""
     try:
         if os.path.isfile(path):
             return os.path.getsize(path)
-        return sum(os.path.getsize(os.path.join(r, f))
-                   for r, _, fs in os.walk(path) for f in fs)
+        sizes = [os.path.getsize(os.path.join(r, f))
+                 for r, _, fs in os.walk(path) for f in fs]
     except OSError:
         return None
+    return sum(sizes) if sizes else None
 
 
 def windowed_event_stats(
@@ -285,7 +283,6 @@ def stream_events_window(
 ) -> DataFrame:
     """Driver-contract entry: stream events.parquet through a watermarked
     tumbling-window aggregation, drain with availableNow, return batch."""
-    from ..engine import tune_session
     from ..sources import _nanos_timestamp_columns
 
     tune_session(spark)  # nanosAsLong: testdata has TIMESTAMP(NANOS) parquet
@@ -318,8 +315,6 @@ def stream_dedup_exact(
     oracle-checkable. In production, bound the state with
     ``withWatermark`` + ``dropDuplicatesWithinWatermark``.
     """
-    from ..engine import tune_session
-
     tune_session(spark)
     path = os.path.join(sf_dir, "events.parquet")
     raw_schema = spark.read.parquet(path).schema
@@ -480,7 +475,6 @@ def stream_sessionize(
     sessionizer, drain with availableNow. One micro-batch (single file)
     with a long watermark delay means exactly the sessions that provably
     closed — every user session but their last — are emitted."""
-    from ..engine import tune_session
     from ..sources import _nanos_timestamp_columns
 
     tune_session(spark)
@@ -510,7 +504,6 @@ def stream_events_sliding(
     Expand operator BEFORE the watermarked stateful aggregation, so
     state is keyed per (window, type) with map-side-combined partials.
     availableNow drain keeps batch parity (oracle-checkable)."""
-    from ..engine import tune_session
     from ..sources import _nanos_timestamp_columns
 
     tune_session(spark)
@@ -558,8 +551,7 @@ def stream_minhash_dedup(
     over signatures (oracle-checkable); in production, bound the state
     with withWatermark + dropDuplicatesWithinWatermark.
     """
-    from ..engine import tune_session
-    from ..ops.dedup import shingles
+    from ..ops.dedup import _row_minhashes, shingles
     from ..ops.text import words
 
     tune_session(spark)
@@ -579,13 +571,7 @@ def stream_minhash_dedup(
         sdf = sdf.repartition(spark.sparkContext.defaultParallelism)
     staged = sdf.select(words("text").alias("__w")).select(
         shingles(F.col("__w"), shingle_n).alias("__sh"))
-    def _mh(seed: int):
-        # one-arg lambda on purpose: a two-arg transform lambda receives
-        # (element, array-index) and the index would shadow the seed
-        return F.array_min(F.transform(
-            "__sh", lambda s: F.md5(F.concat(F.lit(f"{seed}|"), s))))
-
-    mins = [_mh(i) for i in range(num_hashes)]
+    mins = _row_minhashes("__sh", num_hashes)
     sig = staged.select(F.md5(F.concat_ws("|", *mins)).alias("sig"))
     deduped = sig.dropDuplicates(["sig"])
     name = "stream_minhash_" + str(abs(hash(sf_dir)) % 10**8)
@@ -614,21 +600,24 @@ def stream_minhash_verify(
     fingerprints and band hashes are PROVABLY equal to the batch
     ``shingle_fingerprints`` / ``minhash_signatures``+``_banded``
     definitions (see its docstring), so both paths intersect identical
-    arrays and join identical band keys. Per micro-batch:
+    arrays and join identical band keys. Each trigger runs the batch
+    candidate pipeline of ``ops.dedup`` against that index:
 
-    * candidates = new×index (ids disjoint by construction: a doc is
+    * candidates = ``_band_pairs`` of the new batch's ``_bands`` with
+      new ∪ index: new×index (ids disjoint by construction: a doc is
       indexed only after its arrival batch) ∪ new×new (id_a < id_b),
       grouped to per-pair ``n_shared_bands`` — both sides' band sets
       are complete, so the count equals the batch banding join's;
-    * the bounded contract: ``min_shared_bands`` floor + per-doc
-      candidate cap (``cap_candidates_per_doc``, drops counted and
-      logged — never silent). The cap ranks within the BATCH's
-      candidate frame, so its bite is per micro-batch: a bounded amount
-      of verify work per trigger, which is precisely what a streaming
-      deployment needs. With a non-binding cap the drained output
-      provably equals the batch pipeline: every pair (a,b) is generated
-      exactly once — in the batch where the later doc arrives — with
-      its full band-agreement count;
+    * the bounded contract, ``_bound``: ``min_shared_bands`` floor +
+      per-doc candidate cap (``cap_candidates_per_doc``, drops counted
+      and logged — never silent), then the ``_jaccard`` verify. The
+      cap ranks within the BATCH's candidate frame, so its bite is per
+      micro-batch: a bounded amount of verify work per trigger, which
+      is precisely what a streaming deployment needs. With a
+      non-binding cap the drained output provably equals the batch
+      pipeline: every pair (a,b) is generated exactly once — in the
+      batch where the later doc arrives — with its full band-agreement
+      count;
     * verified pairs append to a parquet sink; the batch's bands and
       fingerprints append to the index AFTER candidate generation.
 
@@ -652,8 +641,8 @@ def stream_minhash_verify(
     import shutil
     import tempfile
 
-    from ..engine import tune_session
-    from ..ops.dedup import cap_candidates_per_doc, minhash_doc_index
+    from ..ops.dedup import (_band_pairs, _bands, _bound, _jaccard,
+                             minhash_doc_index)
 
     tune_session(spark)
     # content-keyed reusable work dir (advisor r9: a mkdtemp per call
@@ -729,15 +718,6 @@ def stream_minhash_verify(
         os.rename(tmp, base)
         index_paths[:] = [base]
 
-    def _bands_view(doc_idx: DataFrame) -> DataFrame:
-        """(doc_id, band, bh) view of a doc-grain index frame — explode
-        of the stored band array, exactly the ``_banded`` frame (the
-        ``minhash_doc_index`` equality proof)."""
-        return doc_idx.select(
-            "doc_id", F.explode("__bands").alias("b")).select(
-            "doc_id", F.col("b.band").alias("band"),
-            F.col("b.bh").alias("bh"))
-
     def _process(batch_df: DataFrame, _batch_id: int) -> None:
         t0 = time.time()
         # ONE row-wise projection builds fingerprints + band hashes for
@@ -773,8 +753,6 @@ def stream_minhash_verify(
             doc_idx = doc_idx.repartition(batch_parts)
         doc_idx.write.mode("overwrite").parquet(seg)
         staged = _read_idx(seg)
-        have_index = bool(index_paths)
-        left = _bands_view(staged).alias("l")
         # ONE join generates both pair classes (r11 — was a new×new
         # join ∪ new×index join, i.e. two broadcast builds and a wider
         # plan per trigger): the right side is new ∪ index with an
@@ -785,50 +763,28 @@ def stream_minhash_verify(
         # for new×old pairs it is exactly the old normalization. The
         # generated multiset (and hence every n_shared_bands count) is
         # identical to the two-join union by construction.
-        r_all = _bands_view(staged).withColumn("__new", F.lit(True))
+        new = _bands(staged, "doc_id", "__bands")
+        r_all = new.withColumn("__new", F.lit(True))
         fp = staged.select("doc_id", "__sh")
-        if have_index:
+        if index_paths:
             # ONE doc-grain index table serves both the band join and
             # the fingerprint attach (the r9 pipeline kept two parallel
             # index tables = two appends + two reads per trigger);
             # parquet column pruning keeps each view's read to its own
             # columns
             idx = _read_idx(*index_paths)
-            r_all = r_all.unionByName(
-                _bands_view(idx).withColumn("__new", F.lit(False)))
+            r_all = r_all.unionByName(_bands(idx, "doc_id", "__bands")
+                                      .withColumn("__new", F.lit(False)))
             fp = fp.unionByName(idx.select("doc_id", "__sh"))
-        right = r_all.alias("r")
-        cand = (left.join(
-            right,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.bh") == F.col("r.bh"))
-            & (~F.col("r.__new") | (F.col("l.doc_id") < F.col("r.doc_id"))))
-            .select(F.least("l.doc_id", "r.doc_id").alias("id_a"),
-                    F.greatest("l.doc_id", "r.doc_id").alias("id_b")))
-        pairs = (cand.groupBy("id_a", "id_b")
-                 .agg(F.count(F.lit(1)).alias("n_shared_bands"))
-                 .where(F.col("n_shared_bands") >= min_shared_bands))
-        if max_candidates_per_batch_doc is not None:
-            # no separate checkpoint for the raw pair frame: the cap's
-            # own single annotated checkpoint is the barrier, and since
-            # r11 its drop accounting reads those same blocks — the
-            # candidate join is computed exactly once per trigger
-            pairs = cap_candidates_per_doc(
-                pairs, max_candidates_per_batch_doc,
-                log_context="stream_minhash_verify",
-                drop_sink=cap_drops)
-        else:
-            pairs = pairs.localCheckpoint(eager=True)
-        a = fp.select(F.col("doc_id").alias("id_a"),
-                      F.col("__sh").alias("__sha"))
-        bb = fp.select(F.col("doc_id").alias("id_b"),
-                       F.col("__sh").alias("__shb"))
-        joined = pairs.select("id_a", "id_b").join(a, "id_a").join(bb, "id_b")
-        inter = F.size(F.array_intersect("__sha", "__shb"))
-        union = F.size("__sha") + F.size("__shb") - inter
-        jac = F.round(inter / F.greatest(union, F.lit(1)), 6)
-        (joined.select("id_a", "id_b", jac.alias("jaccard"))
-         .where(F.col("jaccard") >= threshold)
+        pairs = _band_pairs(
+            new, r_all,
+            ~F.col("r.__new") | (F.col("l.doc_id") < F.col("r.doc_id")),
+            [F.least("l.doc_id", "r.doc_id").alias("id_a"),
+             F.greatest("l.doc_id", "r.doc_id").alias("id_b")])
+        pairs = _bound(pairs, min_shared_bands, max_candidates_per_batch_doc,
+                       log_context="stream_minhash_verify",
+                       drop_sink=cap_drops)
+        (_jaccard(pairs.select("id_a", "id_b"), fp, fp, threshold)
          .write.mode("append").parquet(out_dir))
         index_paths.append(seg)   # segment becomes visible to the NEXT batch
         if (compact_every_batches
@@ -850,9 +806,9 @@ def stream_minhash_verify(
     # as one job. aqe_in_batch=True restores adaptive planning for
     # deployments whose triggers carry enough data for skew/coalesce
     # decisions to matter. Like run_available_now, the override is
-    # SESSION-scoped for the drain's duration (single-query-at-a-time
-    # assumption — ADVICE r10 #5); concurrent builds on the same
-    # session should use spark.newSession().
+    # SESSION-scoped for the drain's duration (``scoped_conf``;
+    # single-query-at-a-time assumption — ADVICE r10 #5); concurrent
+    # builds on the same session should use spark.newSession().
     #
     # Static shuffle-partition count = per-trigger INPUT SIZE over a
     # target bytes/partition (guide §2.2: partitions sized to the data,
@@ -868,49 +824,39 @@ def stream_minhash_verify(
     # overrides the target for skew-prone deployments.
     tgt_mb = int(os.environ.get("SDM_STREAM_SHUFFLE_TARGET_MB", "64"))
     try:
-        in_bytes = sum(
+        trig_bytes = sum(
             os.path.getsize(os.path.join(in_dir, f))
-            for f in os.listdir(in_dir) if f.endswith(".parquet"))
+            for f in os.listdir(in_dir)
+            if f.endswith(".parquet")) / max(n_input_files, 1)
+        batch_parts = max(1, min(4 * par,
+                                 int(trig_bytes // (tgt_mb << 20)) + 1))
+        # CPU-bound hash stage: floor at the core count (the interpreted
+        # HOF md5 work is dense even for sub-MB triggers — an A/B at
+        # sf0.1 measured ~1 s/trigger LOST by serializing it), growing
+        # past the cores only when a trigger is big enough to want more
+        # waves (~32 MB/task, so the exchange stays amortized).
+        hash_parts = max(par, min(4 * par, int(trig_bytes // (32 << 20)) + 1))
     except OSError:
-        in_bytes = 0
-    trig_bytes = in_bytes / max(n_input_files, 1)
-    batch_parts = max(1, min(4 * par,
-                             int(trig_bytes // (tgt_mb << 20)) + 1))
-    # CPU-bound hash stage: floor at the core count (the interpreted
-    # HOF md5 work is dense even for sub-MB triggers — an A/B at sf0.1
-    # measured ~1 s/trigger LOST by serializing it), growing past the
-    # cores only when a trigger is big enough to want more waves
-    # (~32 MB/task, so the exchange stays amortized).
-    hash_parts = max(par, min(4 * par, int(trig_bytes // (32 << 20)) + 1))
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled", None)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions", None)
-    prev_bcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", None)
-    try:
-        if not aqe_in_batch:
-            spark.conf.set("spark.sql.adaptive.enabled", "false")
-            spark.conf.set("spark.sql.shuffle.partitions", str(batch_parts))
-            # no auto-broadcast inside the micro-batch body (r11): every
-            # BroadcastExchange runs as its own driver-scheduled job
-            # (plus a driver gap either side), and with batch_parts-sized
-            # static shuffles the equivalent shuffled join executes
-            # INSIDE the action's single job — profiled 2 broadcast-build
-            # jobs + ~0.6 s of gaps per trigger removed. Joins here are
-            # micro-frame×micro-frame, where the broadcast's win is
-            # latency-negative; production triggers with aqe_in_batch
-            # keep AQE's runtime broadcast decisions.
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        q = (sdf.writeStream.foreachBatch(_process)
-             .option("checkpointLocation", os.path.join(wd, "ckpt"))
-             .trigger(availableNow=True).start())
-        q.awaitTermination()
-    finally:
-        if prev_aqe is not None:
-            spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
-        if prev_parts is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        if prev_bcast is not None:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold",
-                           prev_bcast)
+        # an unsizable staging dir takes the core count, never one
+        # partition
+        batch_parts = hash_parts = par
+    # no auto-broadcast inside the micro-batch body (r11): every
+    # BroadcastExchange runs as its own driver-scheduled job (plus a
+    # driver gap either side), and with batch_parts-sized static
+    # shuffles the equivalent shuffled join executes INSIDE the action's
+    # single job — profiled 2 broadcast-build jobs + ~0.6 s of gaps per
+    # trigger removed. Joins here are micro-frame×micro-frame, where the
+    # broadcast's win is latency-negative; production triggers with
+    # aqe_in_batch keep AQE's runtime broadcast decisions.
+    micro = {} if aqe_in_batch else {
+        "spark.sql.adaptive.enabled": "false",
+        "spark.sql.shuffle.partitions": str(batch_parts),
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
+    }
+    with scoped_conf(spark, micro):
+        (sdf.writeStream.foreachBatch(_process)
+         .option("checkpointLocation", os.path.join(wd, "ckpt"))
+         .trigger(availableNow=True).start().awaitTermination())
     dropped = sum(cap_drops)
     if expect_cap_nonbinding and dropped:
         # the registered oracle replays BATCH-global cap semantics,
@@ -948,7 +894,6 @@ def stream_bloom_decontaminate(
     shuffles and zero state — the cheapest possible contamination
     firewall in front of a training-data ingest at 100 TB/day.
     """
-    from ..engine import tune_session
     from ..ops.dedup import bloom_build, bloom_probe
 
     tune_session(spark)
@@ -997,7 +942,6 @@ def stream_dsir_weights(
     yesterday's corpus, score today's ingest online, resample on the
     weight downstream.
     """
-    from ..engine import tune_session
     from ..ops.sampling import dsir_apply, dsir_model
 
     tune_session(spark)

@@ -68,6 +68,33 @@ def test_json_nested_array_iterator(spark, srcdir):
     }
 
 
+def test_json_planning_never_downloads(spark, srcdir, monkeypatch):
+    """Planning a local JSON TriplesMap next to an unstaged http one must
+    not download the http source: the JSON sharer count compares staged
+    paths without staging them."""
+    import urllib.request
+    import uuid
+
+    from sdm_rdfizer_spark.compiler.plan import MappingPlanner
+    from sdm_rdfizer_spark.rml_parser import parse_mapping
+
+    def no_download(*args, **kwargs):
+        raise AssertionError("planning downloaded a source")
+
+    monkeypatch.setattr(urllib.request, "urlretrieve", no_download)
+    url = f"http://example.org/{uuid.uuid4().hex}/people.json"
+    mapping = PREFIXES + "".join(f"""
+<#{name}> a rr:TriplesMap;
+  rml:logicalSource [ rml:source "{src}";
+                      rml:referenceFormulation ql:JSONPath;
+                      rml:iterator "$.people[*]" ];
+  rr:subjectMap [ rr:template "http://ex.org/p/{{id}}" ] .
+""" for name, src in (("Local", f"{srcdir}/people.json"), ("Remote", url)))
+    tms = parse_mapping(mapping)
+    local = next(t for t in tms if t.source.source != url)
+    assert MappingPlanner(spark, tms).scan(local).count() == 2
+
+
 def test_xml_iterator_mapping(spark, srcdir):
     mapping = PREFIXES + f"""
 <#Items> a rr:TriplesMap;

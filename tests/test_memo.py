@@ -20,6 +20,16 @@ def test_bounded_memo_hit_refreshes_recency():
     assert m.get("a") == 1 and m.get("c") == 3 and m.get("d") == 4
 
 
+def test_bounded_memo_subscript_hit_refreshes_recency():
+    """The ``key in m`` + ``m[key]`` hit path ages entries like ``get``."""
+    m = BoundedMemo(3)
+    m["a"], m["b"], m["c"] = 1, 2, 3
+    assert "a" in m and m["a"] == 1     # refresh: "b" is now oldest
+    m["d"] = 4
+    assert "b" not in m
+    assert m["a"] == 1 and m["c"] == 3 and m["d"] == 4
+
+
 def test_bounded_memo_overwrite_keeps_size():
     m = BoundedMemo(2)
     m["a"] = 1

@@ -3,6 +3,7 @@ plans the r2 audit established (broadcast joins, no per-branch recompute
 of gather subplans, shuffle-free text ops)."""
 
 import os
+import sys
 
 import pytest
 
@@ -13,7 +14,6 @@ def _plan(df) -> str:
 
 @pytest.fixture(scope="module")
 def entry(spark):
-    import sys
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as E
     return E
@@ -337,3 +337,28 @@ def test_bucketed_index_join_pays_no_corpus_shuffle(spark, entry):
     in the whole plan is the tiny per-source rollup."""
     plan = _plan(entry.queries()["dedup_bucketed_index"](spark, SF))
     assert plan.count("Exchange hashpartitioning") <= 1, plan
+
+
+# PLANS.md rows (keyed shuffles, broadcast joins, sort-merge joins) of
+# the batch MinHash-LSH queries, which all run the one ops.dedup band
+# join → bound → verify pipeline
+LSH_PLAN_ROWS = {
+    "dedup_minhash_lsh": (2, 1, 0),
+    "dedup_components": (5, 1, 2),
+    "dedup_filter": (5, 1, 2),
+    "dedup_jaccard_verify": (4, 2, 2),
+    "dedup_lsh_recall": (17, 7, 3),
+    "dedup_similarity_join": (6, 2, 2),
+    "dedup_source_matrix": (4, 1, 0),
+}
+
+
+@pytest.mark.parametrize("query", sorted(LSH_PLAN_ROWS))
+def test_minhash_lsh_plan_rows(spark, entry, query):
+    """Each batch LSH query keeps its PLANS.md operator counts."""
+    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
+    from plan_audit import plan_counts
+
+    c = plan_counts(_plan(entry.queries()[query](spark, SF)))
+    got = (c["keyed_shuffles"], c["broadcast_joins"], c["smj"])
+    assert got == LSH_PLAN_ROWS[query], (query, got)

@@ -198,18 +198,25 @@ def test_stream_minhash_verify_batch_parity(spark):
     index, multi-trigger drain) must equal the one-shot batch pipeline
     pair-for-pair, jaccard values included — every pair is generated
     exactly once, in the batch where its later doc arrives, with the
-    full band-agreement count."""
+    full band-agreement count. The drain also leaves the session conf
+    exactly as it found it: a key it overrides that was unset before
+    (the broadcast threshold) is unset again afterwards."""
+    from sdm_rdfizer_spark.engine import tune_session
     from sdm_rdfizer_spark.ops.dedup import (jaccard_verify_pairs,
                                              minhash_lsh_pairs)
     from sdm_rdfizer_spark.streaming import stream_minhash_verify
 
     sf = "/root/testdata/sf0.001"
+    tune_session(spark)
+    spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    conf_before = spark.conf.getAll
     # compact_every_batches=2 forces two mid-stream index compactions
     # (a pure rewrite) — parity must hold across them
     streamed = stream_minhash_verify(
         spark, sf, num_hashes=16, bands=4, shingle_n=3, threshold=0.2,
         min_shared_bands=1, max_candidates_per_batch_doc=None,
         n_input_files=4, compact_every_batches=2)
+    assert spark.conf.getAll == conf_before
     docs = spark.read.parquet(f"{sf}/documents.parquet")
     batch = jaccard_verify_pairs(
         docs, minhash_lsh_pairs(docs, num_hashes=16, bands=4, shingle_n=3),
@@ -217,6 +224,34 @@ def test_stream_minhash_verify_batch_parity(spark):
     s = sorted(map(tuple, streamed.collect()))
     b = sorted(map(tuple, batch.collect()))
     assert s == b and len(s) > 0
+
+
+def test_run_available_now_unsizable_input_uses_core_count(spark, tmp_path,
+                                                          monkeypatch):
+    """A remote input cannot be sized (its walk finds no files): the
+    drain must pin state partitions to defaultParallelism, never to the
+    one partition a zero-byte estimate would derive. The checkpoint's
+    offset log records the shuffle-partition count the query ran with."""
+    import json
+
+    from sdm_rdfizer_spark.streaming import _src_bytes
+
+    monkeypatch.delenv("SDM_STREAM_STATE_PARTITIONS", raising=False)
+    src = tmp_path / "in"
+    spark.createDataFrame([(1, "a"), (2, "b"), (3, "a")], "k long, v string") \
+        .write.parquet(str(src))
+    nbytes = _src_bytes("s3://bucket/corpus/events.parquet")
+    assert nbytes is None
+    sdf = spark.readStream.schema("k long, v string").parquet(str(src))
+    ckpt = tmp_path / "ckpt"
+    out = run_available_now(sdf.groupBy("v").count(), name="unsizable_drain",
+                            output_mode="complete",
+                            checkpoint_dir=str(ckpt), input_bytes=nbytes)
+    assert sorted(map(tuple, out.collect())) == [("a", 2), ("b", 1)]
+    offsets = (ckpt / "offsets" / "0").read_text().splitlines()
+    conf = json.loads(offsets[1])["conf"]
+    assert conf["spark.sql.shuffle.partitions"] == str(
+        spark.sparkContext.defaultParallelism)
 
 
 def test_stream_minhash_verify_binding_cap_fails_loudly(spark):
