@@ -5,6 +5,11 @@ Parameter binding mirrors the reference's ``execution_dic``
 IRI local name; constant / reference / template / nested-function values
 are resolved against the row. Nested composition
 (mapping_functions.py:10-103) is plain recursion here.
+
+Builders take and return Columns (``functions.register_function``), so
+this is where term SQL meets the Column API: each parameter's SQL text
+becomes a Column through ``F.expr``, and the builder's result and validity
+are registered as named layer columns whose names are the SQL handed back.
 """
 
 from __future__ import annotations
@@ -14,9 +19,7 @@ from pyspark.sql import functions as F
 
 from ..functions import FUNCTION_BUILDERS, bool_to_term, local_name
 from ..ir import FunctionMap
-from .terms import (
-    CompiledValue, ExprLayers, _canon, compile_template, valid_value,
-)
+from .terms import CompiledValue, ExprLayers, _canon, compile_template, valid_value
 
 # functions whose result is boolean (term position renders "True"/"False")
 BOOL_FUNCS = {"string_contains", "equal", "notEqual", "isNull", "listContainsElement"}
@@ -27,31 +30,39 @@ def compile_function(
     fm: FunctionMap,
     func_maps: dict[str, FunctionMap],
     *,
-    base: str | None = None,
     as_condition: bool = False,
     layers: ExprLayers | None = None,
 ) -> CompiledValue:
+    if layers is None:
+        raise ValueError(
+            f"function map {fm.name!r} needs a layered compile (ExprLayers)")
+    return _compile(df, fm, func_maps, as_condition, layers)[0]
+
+
+def _compile(df, fm, func_maps, as_condition, layers) -> tuple[CompiledValue, int]:
+    """(result, layer level): a function's columns sit one layer above
+    every nested function it reads and above the template-value layer."""
     params: dict = {}
+    level = 2
     for param_iri, desc in fm.parameters.items():
         key = local_name(param_iri)
         kind = desc.get("type")
         value = desc.get("value", "")
-        if kind == "constant":
-            params[key] = (F.lit(value), F.lit(True))
-            if key == "pattern":
-                params["__pattern_const"] = value
-        elif kind == "reference":
+        if kind == "reference":
             raw = _canon(df, value, layers)
-            params[key] = (raw, valid_value(raw))
+            params[key] = (F.expr(raw), F.expr(valid_value(raw)))
         elif kind == "template":
             cv = compile_template(df, value, encode=False, layers=layers)
-            params[key] = (cv.expr, cv.valid)
+            params[key] = (F.expr(cv.expr), F.expr(cv.valid))
         elif kind == "function":
             nested = desc.get("nested") or func_maps.get(value)
-            ncv = compile_function(df, nested, func_maps, base=base, layers=layers)
-            params[key] = (ncv.expr, ncv.valid)
+            ncv, nlevel = _compile(df, nested, func_maps, False, layers)
+            level = max(level, nlevel + 1)
+            params[key] = (F.expr(ncv.expr), F.expr(ncv.valid))
         else:
             params[key] = (F.lit(value), F.lit(True))
+            if kind == "constant" and key == "pattern":
+                params["__pattern_const"] = value
 
     name = local_name(fm.name)
     builder = FUNCTION_BUILDERS.get(name)
@@ -67,7 +78,11 @@ def compile_function(
         expr, valid = builder(params)
 
     if as_condition:
-        return CompiledValue(expr.cast("boolean"), valid)
-    if name in BOOL_FUNCS:
+        expr = expr.cast("boolean")
+    elif name in BOOL_FUNCS:
         expr = bool_to_term(expr)
-    return CompiledValue(expr, valid & expr.isNotNull())
+    e = layers.add(level, ("fn", id(fm), as_condition), expr)
+    v = layers.add(level, ("fn_valid", id(fm), as_condition), valid)
+    if as_condition:
+        return CompiledValue(e, v), level
+    return CompiledValue(e, f"({v} AND {e} IS NOT NULL)"), level

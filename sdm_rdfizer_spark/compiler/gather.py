@@ -34,15 +34,13 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..ir import CONSTANT, PARENT, QUOTED, REFERENCE, TEMPLATE, GatherMap, TermMap
-from .terms import _nt_escape_literal, compile_term_map
+from .terms import EMPTY_ARRAY, _ident, _nt_escape_literal, compile_term_map
 
 RDF = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
 RDF_FIRST = f"<{RDF}first>"
 RDF_REST = f"<{RDF}rest>"
 RDF_NIL = f"<{RDF}nil>"
 RDF_TYPE = f"<{RDF}type>"
-
-EMPTY = F.array().cast("array<string>")
 
 
 def _term_value_array(df: DataFrame, tm: TermMap, base: str | None) -> Column:
@@ -55,16 +53,12 @@ def _term_value_array(df: DataFrame, tm: TermMap, base: str | None) -> Column:
     if tm.kind == REFERENCE:
         dtype = dict(df.dtypes).get(tm.value, "")
         if dtype.startswith("array"):
-            return F.filter(
-                F.transform(
-                    F.col(tm.value),
-                    lambda e: F.concat(
-                        F.lit('"'), _nt_escape_literal(e.cast("string")), F.lit('"')),
-                ),
-                lambda x: x.isNotNull(),
-            )
+            lit = _nt_escape_literal("CAST(__e AS STRING)")
+            return F.expr(
+                f"filter(transform({_ident(tm.value)}, "
+                f"__e -> concat('\"', {lit}, '\"')), __x -> __x IS NOT NULL)")
     cv = compile_term_map(df, tm, "object", base=base)
-    return F.when(cv.valid, F.array(cv.expr)).otherwise(EMPTY)
+    return F.expr(f"CASE WHEN {cv.valid} THEN array({cv.expr}) ELSE {EMPTY_ARRAY} END")
 
 
 def _item_arrays(
@@ -88,10 +82,10 @@ def _item_arrays(
 
 def compile_gather(
     df: DataFrame,
-    subject: Column,
-    subject_valid: Column,
-    pred: Column,
-    graph: Column,
+    subject: str,
+    subject_valid: str,
+    pred: str,
+    graph: str,
     gm: GatherMap,
     *,
     base: str | None = None,
@@ -100,7 +94,7 @@ def compile_gather(
     as_subject: bool = False,
     row_order: str = "value",
 ) -> DataFrame:
-    """Triples DataFrame for one gather map.
+    """Triples DataFrame for one gather map (term arguments are SQL text).
 
     ``node_term`` is the gather map's own template/reference (the
     collection node); when present, rows sharing a node value are grouped
@@ -110,6 +104,8 @@ def compile_gather(
     hangs directly off ``subject``.
     """
     df, arrays = _item_arrays(df, gm, base, parent_items)
+    subject, subject_valid, pred, graph = (
+        F.expr(x) for x in (subject, subject_valid, pred, graph))
 
     if gm.strategy == "cartesian" and len(arrays) >= 2 and not as_subject:
         # one collection per combination of item values
@@ -135,7 +131,8 @@ def compile_gather(
         )
         return _emit(grouped, gm, as_subject=False)
 
-    items = F.array_compact(F.flatten(F.array(*arrays))) if arrays else EMPTY
+    items = (F.array_compact(F.flatten(F.array(*arrays))) if arrays
+             else F.expr(EMPTY_ARRAY))
 
     if as_subject:
         grouped = df.where(subject_valid).select(
@@ -146,7 +143,7 @@ def compile_gather(
 
     if node_term is not None and node_term.kind in (TEMPLATE, REFERENCE):
         ncv = compile_term_map(df, node_term, "subject", base=base)
-        node = ncv.expr
+        node, node_valid = F.expr(ncv.expr), F.expr(ncv.valid)
         # group across rows: one collection per (s, p, node). The shuffle
         # carries one row per SOURCE row (its items still packed as an
         # array) — no posexplode round-trip, and the per-group sort works
@@ -167,7 +164,7 @@ def compile_gather(
             # parquet scans may repartition for parallelism, which breaks
             # source order — but the reference has no parquet source, so
             # every parity surface is covered)
-            rows = df.where(subject_valid & ncv.valid).select(
+            rows = df.where(subject_valid & node_valid).select(
                 subject.alias("s"), pred.alias("p"),
                 graph.cast("string").alias("g"),
                 node.alias("node"), items.alias("items"),
@@ -178,7 +175,7 @@ def compile_gather(
         else:
             # default "value": RML-CC leaves cross-row item order
             # undefined; sort by item value for a deterministic output
-            rows = df.where(subject_valid & ncv.valid).select(
+            rows = df.where(subject_valid & node_valid).select(
                 subject.alias("s"), pred.alias("p"),
                 graph.cast("string").alias("g"),
                 node.alias("node"), items.alias("items"),

@@ -38,20 +38,12 @@ from ..ir import (
     CONSTANT, FUNCTION, GATHER, PARENT, QUOTED, REFERENCE, TEMPLATE,
     TriplesMap, TermMap,
 )
+from ..ops._exprs import _sql_str
 from ..sources import read_source
 from .terms import (
-    CompiledValue, ExprLayers, _col, _memo_tree, canonical_string,
-    compile_term_map, compile_template, valid_value,
+    EMPTY_ARRAY, NULL_STRING, CompiledValue, ExprLayers, _canon, _ident,
+    compile_term_map, compile_template, opt_str, valid_value,
 )
-
-
-def _tcol(name: str, alias: str):
-    """Memoized constant aliased column reference (``F.col(name)
-    .alias(alias)`` is two py4j round trips and the same pairs recur in
-    every TriplesMap's output projection — r11, same contract as
-    ``terms._col``)."""
-    return _memo_tree(("tcol", name, alias),
-                      lambda: F.col(name).alias(alias))
 
 RDF_TYPE = "<http://www.w3.org/1999/02/22-rdf-syntax-ns#type>"
 RDF = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
@@ -246,10 +238,20 @@ def _tset(*term_maps) -> set:
     return out
 
 
-def _target_array(tset: set):
+def _target_array(tset: set) -> str:
     if not tset:
-        return F.array().cast("array<string>")
-    return F.array(*[F.lit(t) for t in sorted(tset)])
+        return EMPTY_ARRAY
+    return f"array({', '.join(_sql_str(t) for t in sorted(tset))})"
+
+
+def _key_cond(left: list[str], right: list[str]):
+    """Equi-join condition over SQL key expressions (names unique to
+    each side, so no DataFrame-qualified references are needed)."""
+    return F.expr(" AND ".join(f"({a}) = {b}" for a, b in zip(left, right)))
+
+
+def _all_valid(keys: list[str]) -> str:
+    return " AND ".join(valid_value(k) for k in keys)
 
 
 class MappingPlanner:
@@ -335,10 +337,8 @@ class MappingPlanner:
         self._parent_plain: dict[tuple, DataFrame] = {}
         self._fuse_counter = 0
         # compile_all compiles TriplesMaps from a small thread pool (the
-        # compile phase is dominated by py4j round-trip LATENCY — one
-        # socket round trip per Column operation — so independent TMs
-        # overlap almost perfectly; a 10-TM GTFS mapping measured ~4 s
-        # serial vs ~1 s pooled). This RLock serializes every touch of
+        # compile phase is dominated by py4j round-trip LATENCY, so
+        # independent TMs overlap). This RLock serializes every touch of
         # the shared caches above so concurrent TMs can't build the same
         # scan/parent subplan twice (the shared-subplan design is what
         # the plan census and the persist() reuse depend on).
@@ -594,11 +594,10 @@ class MappingPlanner:
         """
         asserted = [tm for tm in self.tms if tm.kind != "NonAssertedTriplesMap"]
         if len(asserted) > 1:
-            # Compile TMs from a thread pool: building Column trees is
-            # one py4j socket round trip PER OPERATION, so a multi-TM
-            # compile is ~75% driver-side socket wait (profiled: 14k
-            # round trips, 3 s, for a 10-TM mapping). Independent TMs
-            # overlap that latency; the planner's shared caches are
+            # Compile TMs from a thread pool: a compile is mostly
+            # driver-side py4j socket wait (scans, schema reads, one
+            # selectExpr per layer, probes). Independent TMs overlap
+            # that latency; the planner's shared caches are
             # serialized behind _compile_lock, so every shared subplan
             # (scans, parent pairs/groups, probes) is still built
             # exactly once and the emitted plan is the same as the
@@ -1147,7 +1146,7 @@ class MappingPlanner:
             # condition — an inner join that multiplies/filters every POM
             # of this TM, so it is applied to the scan before term compile
             df, qsub = self._join_quoted_subject(tm, df)
-            subj = CompiledValue(F.col(qsub), F.col(qsub).isNotNull())
+            subj = CompiledValue(qsub, f"{qsub} IS NOT NULL")
         elif subject_term.kind == QUOTED:
             # RML-star quoted subject — evaluated over the current row
             # (reference: inner_semantify_file call at semantify.py:6529)
@@ -1167,18 +1166,18 @@ class MappingPlanner:
 
             cond = compile_function(
                 df, tm.func_maps[tm.subject.condition], tm.func_maps,
-                base=self.base, as_condition=True, layers=layers,
+                as_condition=True, layers=layers,
             )
-            base_filter = base_filter & cond.valid & cond.expr
+            base_filter = f"{base_filter} AND {cond.valid} AND {cond.expr}"
 
         entries = []   # structs for the explode branch: (p, o, g, v, targets)
         # rdf:type triples from rr:class (semantify.py:6556-6563); R2RML
         # emits into EVERY declared graph map, so one entry per graph
         for cls in tm.subject.rdf_classes:
             for graph in graphs:
-                entries.append((F.lit(RDF_TYPE), F.lit(f"<{cls}>"), graph,
-                                F.lit(True), _tset(tm.subject.term), None,
-                                (F.lit(""), f"<{cls}>")))
+                entries.append((_sql_str(RDF_TYPE), _sql_str(f"<{cls}>"), graph,
+                                "true", _tset(tm.subject.term), None,
+                                ("''", f"<{cls}>")))
 
         branches: list[DataFrame] = []
         deferred = []  # join-valued POMs: closures over the layered base_df
@@ -1209,7 +1208,8 @@ class MappingPlanner:
 
         # every term above referenced named layer columns; materialize the
         # layered projections once, then filter + compute the subject
-        base_df = layers.apply(df).where(base_filter).withColumn("__s", subj.expr)
+        base_df = layers.apply(df).where(base_filter).selectExpr(
+            "*", f"{subj.expr} AS __s")
         # non-fusable (1:N) joins branch from the pre-fuse frame so they
         # don't pay for left joins whose columns they never read
         pre_fuse_df = base_df
@@ -1228,17 +1228,12 @@ class MappingPlanner:
             gsub = compile_term_map(df, subject_term, "subject", base=self.base)
             for graph in self._graph_exprs(df, tm.subject.graphs):
                 gdf = compile_gather(
-                    df, gsub.expr, gsub.valid, F.lit(None).cast("string"),
+                    df, gsub.expr, gsub.valid, NULL_STRING,
                     graph, tm.subject.term.gather, base=self.base,
                     as_subject=True, parent_items=self._gather_parent_items(),
                     row_order=self.gather_row_order,
                 )
-                if self.collect_targets:
-                    gdf = gdf.withColumn(
-                        "__targets", _target_array(_tset(tm.subject.term)))
-                if self.track_rules:
-                    gdf = gdf.withColumn("__rule", F.lit(None).cast("string"))
-                branches.append(gdf)
+                branches.append(self._tag(gdf, _tset(tm.subject.term), None))
 
         if narrow_refs is not None:
             # fused N:1 joins are fine: their left joins already applied
@@ -1252,42 +1247,25 @@ class MappingPlanner:
             return self._narrow_entries(tm, base_df, entries, narrow_refs,
                                         subject_term)
         if entries:
-            # positional structs + ONE struct-level cast each (r11,
-            # guide §1.2 step 2): per-field .alias()/.cast() cost one
-            # py4j round trip each (~7 per entry × ~30 entries per wide
-            # TM); a positional struct plus a single named-struct cast
-            # is two calls and applies the identical field-wise string
-            # casts (Cast over struct<…> maps per field; identity casts
-            # are simplified away, so the optimized plan is the one the
-            # per-field form built). The cast also unifies the field
-            # NAMES, which array() requires across elements.
-            def fields(p, o, g, v, tset, rule=None, osplit=None):
-                fs = [p, o, g, v]
+            def struct(p, o, g, v, tset, rule=None, osplit=None):
+                fs = (f"'p', CAST({p} AS STRING), 'o', CAST({o} AS STRING), "
+                      f"'g', CAST({g} AS STRING), 'v', {v}")
                 if self.collect_targets:
-                    fs.append(_target_array(tset))
+                    fs += f", 't', {_target_array(tset)}"
                 if self.track_rules:
-                    fs.append(F.lit(rule))
-                return fs
+                    fs += f", 'r', {opt_str(rule)}"
+                return f"named_struct({fs})"
 
-            stype = "p:string,o:string,g:string,v:boolean"
+            out_cols = ["s", "__t.p AS p", "__t.o AS o", "__t.g AS g"]
             if self.collect_targets:
-                stype += ",t:array<string>"
+                out_cols.append("__t.t AS __targets")
             if self.track_rules:
-                stype += ",r:string"
-            st = f"struct<{stype}>"
-            structs = F.array(*[
-                F.struct(*fields(*entry)).cast(st) for entry in entries
-            ])
-            out_cols = ["s", _tcol("__t.p", "p"),
-                        _tcol("__t.o", "o"), _tcol("__t.g", "g")]
-            if self.collect_targets:
-                out_cols.append(_tcol("__t.t", "__targets"))
-            if self.track_rules:
-                out_cols.append(_tcol("__t.r", "__rule"))
+                out_cols.append("__t.r AS __rule")
+            structs = ", ".join(struct(*entry) for entry in entries)
             exploded = (
-                base_df.select(_tcol("__s", "s"), F.explode(structs).alias("__t"))
-                .where(_col("__t.v"))
-                .select(*out_cols)
+                base_df.selectExpr("__s AS s", f"explode(array({structs})) AS __t")
+                .where("__t.v")
+                .selectExpr(*out_cols)
             )
             branches.insert(0, exploded)
         if not branches:
@@ -1323,21 +1301,14 @@ class MappingPlanner:
             # per-row core bytes
             core, sfx = osplit if osplit is not None else (o, "")
             norm.append((p, core, g, v, rule, sfx))
-        structs = F.array(*[
-            F.struct(
-                F.lit(i).alias("pi"),
-                core.cast("string").alias("o"),
-                v.alias("v"),
-            )
-            for i, (_p, core, _g, v, _r, _s) in enumerate(norm)
-        ])
+        structs = ", ".join(
+            f"named_struct('pi', {i}, 'o', CAST({core} AS STRING), 'v', {v})"
+            for i, (_p, core, _g, v, _r, _s) in enumerate(norm))
         refs = list(dict.fromkeys(refs))
         exploded = (
-            base_df.select(*[F.col(r) for r in refs],
-                           F.explode(structs).alias("__t"))
-            .where(F.col("__t.v"))
-            .select(*refs, F.col("__t.pi").alias("__pi"),
-                    F.col("__t.o").alias("__o"))
+            base_df.selectExpr(*map(_ident, refs), f"explode(array({structs})) AS __t")
+            .where("__t.v")
+            .selectExpr(*map(_ident, refs), "__t.pi AS __pi", "__t.o AS __o")
             .dropDuplicates(refs + ["__pi", "__o"])
         )
         # subject validity was enforced pre-dedup by base_filter; the
@@ -1352,32 +1323,30 @@ class MappingPlanner:
                                 infer_datatypes=self.infer_datatypes,
                                 func_maps=tm.func_maps, layers=post_layers)
         exploded = post_layers.apply(exploded)
-        p_arr = F.array(*[p for p, *_ in norm])
-        g_arr = F.array(*[g.cast("string") for _p, _c, g, _v, _r, _s in norm])
-        s_arr = F.array(*[F.lit(s) for *_x, s in norm])
+
+        def pick(items) -> str:
+            return f"element_at(array({', '.join(items)}), __pi + 1)"
+
         out = [
-            subj.expr.alias("s"),
-            F.element_at(p_arr, F.col("__pi") + 1).cast("string").alias("p"),
-            F.concat(F.col("__o"),
-                     F.element_at(s_arr, F.col("__pi") + 1)).alias("o"),
-            F.element_at(g_arr, F.col("__pi") + 1).alias("g"),
+            f"{subj.expr} AS s",
+            f"CAST({pick(p for p, *_ in norm)} AS STRING) AS p",
+            f"concat(__o, {pick(_sql_str(s) for *_x, s in norm)}) AS o",
+            f"{pick(f'CAST({g} AS STRING)' for _p, _c, g, *_x in norm)} AS g",
         ]
         if self.track_rules:
-            r_arr = F.array(*[F.lit(r).cast("string")
-                              for _p, _c, _g, _v, r, _s in norm])
-            out.append(F.element_at(r_arr, F.col("__pi") + 1).alias("__rule"))
-        return exploded.select(*out)
+            out.append(f"{pick(opt_str(r) for *_x, r, _s in norm)} AS __rule")
+        return exploded.selectExpr(*out)
 
     def _graph_exprs(self, df: DataFrame, graphs: list[TermMap], layers=None) -> list:
         """One graph expression per declared graph map — R2RML emits the
         triple into EVERY named graph (rr:graphMap is multi-valued); a
         defaultGraph constant maps to NULL (default graph)."""
         if not graphs:
-            return [F.lit(None).cast("string")]
+            return [NULL_STRING]
         out = []
         for g in graphs:
             if g.kind == CONSTANT and "defaultGraph" in g.value:
-                out.append(F.lit(None).cast("string"))
+                out.append(NULL_STRING)
             else:
                 out.append(compile_term_map(df, g, "graph", base=self.base,
                                             layers=layers).expr)
@@ -1390,18 +1359,20 @@ class MappingPlanner:
         over the layered base_df for join-valued POMs."""
         om = pom.obj
         if om.kind == GATHER:
-            # gathers build their own plan from the raw scan — layer-free
+            # gathers build their own plan from the raw scan; only a
+            # function-valued predicate needs layer columns
             from .gather import compile_gather
 
+            glayers = ExprLayers()
             pred = compile_term_map(df, pom.predicate, "predicate", base=self.base,
-                                    func_maps=tm.func_maps)
+                                    func_maps=tm.func_maps, layers=glayers)
+            df = glayers.apply(df)
             ggraphs = self._graph_exprs(df, pom.graphs or tm.subject.graphs)
             st = tm.subject.term
             if st.kind == QUOTED and st.join and st.join.child:
                 # joined quoted subject: compile_tm already joined the
                 # quoted pairs into df as __qsub
-                subj = CompiledValue(F.col("__qsub"),
-                                     F.col("__qsub").isNotNull())
+                subj = CompiledValue("__qsub", "__qsub IS NOT NULL")
             elif st.kind == QUOTED:
                 subj = self._quoted_term(
                     df, self._resolve_tm(st.parent_tm, "the quoted subject map"))
@@ -1414,7 +1385,7 @@ class MappingPlanner:
                                     term_type=om.term_type)
             gparts = [
                 compile_gather(
-                    df, subj.expr, subj.valid & pred.valid, pred.expr, graph,
+                    df, subj.expr, f"({subj.valid} AND {pred.valid})", pred.expr, graph,
                     om.gather, base=self.base, node_term=node_term,
                     parent_items=self._gather_parent_items(),
                     row_order=self.gather_row_order,
@@ -1422,15 +1393,8 @@ class MappingPlanner:
                 for graph in ggraphs
             ]
             gdf = reduce(DataFrame.union, gparts)
-            if self.collect_targets:
-                # the explode branch carries a 5th __targets column; gather
-                # branches must match the union schema (ADVICE r1)
-                tgs = _tset(tm.subject.term, pom.predicate, om, *(pom.graphs or []))
-                gdf = gdf.withColumn("__targets", _target_array(tgs))
-            if self.track_rules:
-                gdf = gdf.withColumn("__rule",
-                                     F.lit(_rule_id(om)).cast("string"))
-            return gdf
+            tgs = _tset(tm.subject.term, pom.predicate, om, *(pom.graphs or []))
+            return self._tag(gdf, tgs, _rule_id(om))
 
         pred = compile_term_map(df, pom.predicate, "predicate", base=self.base,
                                 func_maps=tm.func_maps, layers=layers)
@@ -1443,8 +1407,8 @@ class MappingPlanner:
                                    func_maps=tm.func_maps, layers=layers)
             osplit = ((obj.core, obj.suffix)
                       if obj.suffix is not None else None)
-            return [(pred.expr, obj.expr, graph, pred.valid & obj.valid, tgs,
-                     _rule_id(om), osplit)
+            return [(pred.expr, obj.expr, graph, f"({pred.valid} AND {obj.valid})",
+                     tgs, _rule_id(om), osplit)
                     for graph in graphs]
         if om.kind == PARENT:
             return self._compile_join(tm, df, pred, om, graphs, layers, tgs)
@@ -1486,22 +1450,16 @@ class MappingPlanner:
             counter["n"] += 1
             tag = counter["n"]
             nkeys = len(pkeys)
-            grouped = self._parent_groups(ptm, pkeys)
-            grouped = grouped.select(
-                *[F.col(f"__gk{i}").alias(f"__gpk{tag}_{i}") for i in range(nkeys)],
-                F.col("__gi").alias(f"__gpi{tag}"),
+            gkeys = [f"__gpk{tag}_{i}" for i in range(nkeys)]
+            grouped = self._parent_groups(ptm, pkeys).selectExpr(
+                *[f"__gk{i} AS {k}" for i, k in enumerate(gkeys)],
+                f"__gi AS __gpi{tag}",
             )
             if self._parent_broadcast.get((ptm.tm_id, pkeys)):
                 grouped = F.broadcast(grouped)
             keys = [self._join_key_expr(cur, c) for c in item.join.child]
-            cond = reduce(
-                lambda a, b: a & b,
-                [keys[i] == grouped[f"__gpk{tag}_{i}"] for i in range(nkeys)],
-            )
-            joined = cur.join(grouped, cond, "left")
-            arr = F.coalesce(joined[f"__gpi{tag}"],
-                             F.array().cast("array<string>"))
-            return joined, arr
+            joined = cur.join(grouped, _key_cond(keys, gkeys), "left")
+            return joined, F.expr(f"coalesce(__gpi{tag}, {EMPTY_ARRAY})")
 
         return parent_items
 
@@ -1518,18 +1476,10 @@ class MappingPlanner:
         cache_key = ("groups", parent_tm.tm_id, parent_keys)
         if cache_key in self._parent_cache:
             return self._parent_cache[cache_key]
-        pdf = self.parent_scan(parent_tm)
-        players = ExprLayers()
-        psub = compile_term_map(pdf, parent_tm.subject.term, "subject",
-                                base=self.base, layers=players)
-        pkey_exprs = [self._join_key_expr(pdf, k, players) for k in parent_keys]
-        sel = players.apply(pdf).where(psub.valid).select(
-            psub.expr.alias("__po"),
-            *[k.alias(f"__gk{i}") for i, k in enumerate(pkey_exprs)],
-        )
-        for i in range(len(parent_keys)):
-            sel = sel.where(valid_value(F.col(f"__gk{i}")))
-        grouped = sel.groupBy(*[f"__gk{i}" for i in range(len(parent_keys))]) \
+        gkeys = [f"__gk{i}" for i in range(len(parent_keys))]
+        sel = self._key_subject_pairs(self.parent_scan(parent_tm), parent_tm,
+                                      parent_keys, gkeys)
+        grouped = sel.groupBy(*gkeys) \
             .agg(F.array_sort(F.collect_set("__po")).alias("__gi"))
         src = parent_tm.source.source
         if src and os.path.isfile(src) and os.path.getsize(src) < BROADCAST_BYTES:
@@ -1553,8 +1503,8 @@ class MappingPlanner:
             # the TM's single explode pass.
             pobj = compile_term_map(df, parent_tm.subject.term, "subject",
                                     base=self.base, layers=layers)
-            return [(pred.expr, pobj.expr, graph, pred.valid & pobj.valid, tgs,
-                     _rule_id(om))
+            return [(pred.expr, pobj.expr, graph, f"({pred.valid} AND {pobj.valid})",
+                     tgs, _rule_id(om))
                     for graph in graphs]
 
         if same_source and om.join.child == om.join.parent:
@@ -1562,16 +1512,14 @@ class MappingPlanner:
             # the same source ⇒ the parent row IS the child row.
             pobj = compile_term_map(df, parent_tm.subject.term, "subject",
                                     base=self.base, layers=layers)
-            return [(pred.expr, pobj.expr, graph, pred.valid & pobj.valid, tgs,
-                     _rule_id(om))
+            return [(pred.expr, pobj.expr, graph, f"({pred.valid} AND {pobj.valid})",
+                     tgs, _rule_id(om))
                     for graph in graphs]
 
         pairs = self._parent_pairs(parent_tm, tuple(om.join.parent))
         key_exprs = [
             self._join_key_expr(df, c, layers) for c in om.join.child
         ]
-        nkeys = len(om.join.child)
-        pred_expr, pred_valid = pred.expr, pred.valid
 
         if self._parent_key_unique(parent_tm, tuple(om.join.parent)):
             # N:1 join — fuse as a left join into the single explode pass
@@ -1584,62 +1532,57 @@ class MappingPlanner:
                 tag = self._fuse_counter
 
             def fuse(base_df: DataFrame):
-                renamed = pairs.select(
-                    F.col("__po").alias(f"__fpo{tag}"),
-                    *[F.col(f"__pk{i}").alias(f"__fpk{tag}_{i}")
-                      for i in range(nkeys)],
-                )
+                pkeys = [f"__fpk{tag}_{i}" for i in range(len(key_exprs))]
+                renamed = pairs.selectExpr(
+                    f"__po AS __fpo{tag}",
+                    *[f"__pk{i} AS {k}" for i, k in enumerate(pkeys)])
                 if self._parent_broadcast.get((parent_tm.tm_id, tuple(om.join.parent))):
                     renamed = F.broadcast(renamed)
-                cond = reduce(
-                    lambda a, b: a & b,
-                    [key_exprs[i] == renamed[f"__fpk{tag}_{i}"] for i in range(nkeys)],
-                )
-                joined = base_df.join(renamed, cond, "left")
+                joined = base_df.join(renamed, _key_cond(key_exprs, pkeys), "left")
                 fuse_entries = [
-                    (
-                        pred_expr,
-                        F.col(f"__fpo{tag}"),
-                        graph,
-                        pred_valid & F.col(f"__fpo{tag}").isNotNull(),
-                        tgs,
-                        _rule_id(om),
-                    )
+                    (pred.expr, f"__fpo{tag}", graph,
+                     f"({pred.valid} AND __fpo{tag} IS NOT NULL)", tgs, _rule_id(om))
                     for graph in graphs
                 ]
                 return joined, fuse_entries
 
             return ("fuse", fuse)
 
+        return self._join_branch(graphs, pred.expr, pred.valid, key_exprs,
+                                 pairs, tgs, _rule_id(om))
+
+    def _join_branch(self, graphs, pred_expr, pred_valid, key_exprs, pairs,
+                     tgs, rule):
+        """Closure over the layered base frame for a 1:N join POM:
+        (subject, predicate, graph, child keys) inner-joined with the
+        (key…, object) ``pairs`` on ``__pk*``."""
+        ckeys = [f"__ck{i}" for i in range(len(key_exprs))]
+
         def build(base_df: DataFrame) -> DataFrame:
-            graph = graphs[0] if len(graphs) == 1 else F.explode(F.array(*graphs))
-            child = base_df.where(pred_valid).select(
-                "__s",
-                pred_expr.alias("__p"),
-                graph.alias("__g"),
-                *[k.alias(f"__ck{i}") for i, k in enumerate(key_exprs)],
-            )
+            graph = graphs[0] if len(graphs) == 1 else f"explode(array({', '.join(graphs)}))"
             # NULL join keys never match (functions.py:1882-1912) — inner
             # join gives that free, but filtering early avoids shuffling.
-            for i in range(nkeys):
-                child = child.where(valid_value(F.col(f"__ck{i}")))
-            cond = reduce(
-                lambda a, b: a & b,
-                [child[f"__ck{i}"] == pairs[f"__pk{i}"] for i in range(nkeys)],
-            )
-            cols = [
-                F.col("__s").alias("s"),
-                F.col("__p").alias("p"),
-                F.col("__po").alias("o"),
-                F.col("__g").alias("g"),
-            ]
-            if self.collect_targets:
-                cols.append(_target_array(tgs).alias("__targets"))
-            if self.track_rules:
-                cols.append(F.lit(_rule_id(om)).cast("string").alias("__rule"))
-            return child.join(pairs, cond, "inner").select(*cols)
+            child = base_df.where(pred_valid).selectExpr(
+                "__s", f"{pred_expr} AS __p", f"{graph} AS __g",
+                *[f"{k} AS {c}" for k, c in zip(key_exprs, ckeys)],
+            ).where(_all_valid(ckeys))
+            cond = _key_cond(ckeys, [f"__pk{i}" for i in range(len(ckeys))])
+            return self._tag(
+                child.join(pairs, cond, "inner").selectExpr(
+                    "__s AS s", "__p AS p", "__po AS o", "__g AS g"),
+                tgs, rule)
 
         return build
+
+    def _tag(self, df: DataFrame, tgs, rule) -> DataFrame:
+        """Append the ``__targets`` / ``__rule`` columns the union schema
+        carries when target collection / rule tracking is on."""
+        cols = []
+        if self.collect_targets:
+            cols.append(f"{_target_array(tgs)} AS __targets")
+        if self.track_rules:
+            cols.append(f"{opt_str(rule)} AS __rule")
+        return df.selectExpr("*", *cols) if cols else df
 
     # ------------------------------------------------------------------
     def _quoted_term(self, df: DataFrame, qtm: TriplesMap, layers=None) -> CompiledValue:
@@ -1664,9 +1607,8 @@ class MappingPlanner:
             obj = compile_term_map(df, om, "object", base=self.base,
                                    infer_datatypes=self.infer_datatypes,
                                    func_maps=qtm.func_maps, layers=layers)
-        expr = F.concat(F.lit("<< "), subj.expr, F.lit(" "), pred.expr,
-                        F.lit(" "), obj.expr, F.lit(" >>"))
-        return CompiledValue(expr, subj.valid & pred.valid & obj.valid)
+        expr = f"concat('<< ', {subj.expr}, ' ', {pred.expr}, ' ', {obj.expr}, ' >>')"
+        return CompiledValue(expr, f"({subj.valid} AND {pred.valid} AND {obj.valid})")
 
     def _compile_quoted(self, tm, df, pred, om, graphs, layers, tgs=frozenset()):
         """Quoted-triples-map object: same source ⇒ fused projection;
@@ -1681,8 +1623,8 @@ class MappingPlanner:
                     f"same logical source ({tm.tm_id} → {om.parent_tm})"
                 )
             qcv = self._quoted_term(df, qtm, layers=layers)
-            return [(pred.expr, qcv.expr, graph, pred.valid & qcv.valid, tgs,
-                     _rule_id(om))
+            return [(pred.expr, qcv.expr, graph, f"({pred.valid} AND {qcv.valid})",
+                     tgs, _rule_id(om))
                     for graph in graphs]
 
         qdf = self.parent_scan(qtm)
@@ -1691,41 +1633,17 @@ class MappingPlanner:
         pkey_exprs = [
             self._join_key_expr(qdf, k, qlayers) for k in om.join.parent
         ]
-        pairs = qlayers.apply(qdf).where(qcv.valid).select(
-            qcv.expr.alias("__po"),
-            *[k.alias(f"__pk{i}") for i, k in enumerate(pkey_exprs)],
+        pairs = qlayers.apply(qdf).where(qcv.valid).selectExpr(
+            f"{qcv.expr} AS __po",
+            *[f"{k} AS __pk{i}" for i, k in enumerate(pkey_exprs)],
         )
         # raw-unique keys ⇒ pairs already distinct (same shortcut as
         # _parent_pairs / _join_quoted_subject)
         if not self._raw_key_unique(qtm, tuple(om.join.parent)):
             pairs = pairs.dropDuplicates()
         key_exprs = [self._join_key_expr(df, c, layers) for c in om.join.child]
-        nkeys = len(om.join.child)
-        pred_expr, pred_valid = pred.expr, pred.valid
-
-        def build(base_df: DataFrame) -> DataFrame:
-            graph = graphs[0] if len(graphs) == 1 else F.explode(F.array(*graphs))
-            child = base_df.where(pred_valid).select(
-                "__s", pred_expr.alias("__p"), graph.alias("__g"),
-                *[k.alias(f"__ck{i}") for i, k in enumerate(key_exprs)],
-            )
-            for i in range(nkeys):
-                child = child.where(valid_value(F.col(f"__ck{i}")))
-            cond = reduce(
-                lambda a, b: a & b,
-                [child[f"__ck{i}"] == pairs[f"__pk{i}"] for i in range(nkeys)],
-            )
-            cols = [
-                F.col("__s").alias("s"), F.col("__p").alias("p"),
-                F.col("__po").alias("o"), F.col("__g").alias("g"),
-            ]
-            if self.collect_targets:
-                cols.append(_target_array(tgs).alias("__targets"))
-            if self.track_rules:
-                cols.append(F.lit(_rule_id(om)).cast("string").alias("__rule"))
-            return child.join(pairs, cond, "inner").select(*cols)
-
-        return build
+        return self._join_branch(graphs, pred.expr, pred.valid, key_exprs,
+                                 pairs, tgs, _rule_id(om))
 
     def _join_quoted_subject(self, tm: TriplesMap, df: DataFrame):
         """Inner-join the quoted TM's (join-key…, << s p o >>) pairs into
@@ -1738,12 +1656,11 @@ class MappingPlanner:
         qlayers = ExprLayers()
         qcv = self._quoted_term(qdf, qtm, layers=qlayers)
         pkeys = [self._join_key_expr(qdf, k, qlayers) for k in om.join.parent]
-        pairs = qlayers.apply(qdf).where(qcv.valid).select(
-            qcv.expr.alias("__qsub"),
-            *[k.alias(f"__qsk{i}") for i, k in enumerate(pkeys)],
-        )
-        for i in range(len(pkeys)):
-            pairs = pairs.where(valid_value(F.col(f"__qsk{i}")))
+        qskeys = [f"__qsk{i}" for i in range(len(pkeys))]
+        pairs = qlayers.apply(qdf).where(qcv.valid).selectExpr(
+            f"{qcv.expr} AS __qsub",
+            *[f"{k} AS {q}" for k, q in zip(pkeys, qskeys)],
+        ).where(_all_valid(qskeys))
         # raw-unique join keys ⇒ (key…, quoted-term) pairs are already
         # distinct — skip the build-side dedup shuffle (same shortcut as
         # _parent_pairs; conservative for string/float keys)
@@ -1753,14 +1670,8 @@ class MappingPlanner:
         if src and os.path.isfile(src) and os.path.getsize(src) < BROADCAST_BYTES:
             pairs = F.broadcast(pairs)
         ckeys = [self._join_key_expr(df, c) for c in om.join.child]
-        for k in ckeys:
-            df = df.where(valid_value(k))
-        cond = reduce(
-            lambda a, b: a & b,
-            [ckeys[i] == pairs[f"__qsk{i}"] for i in range(len(ckeys))],
-        )
-        joined = df.join(pairs, cond, "inner").drop(
-            *[f"__qsk{i}" for i in range(len(pkeys))])
+        df = df.where(_all_valid(ckeys))
+        joined = df.join(pairs, _key_cond(ckeys, qskeys), "inner").drop(*qskeys)
         return joined, "__qsub"
 
     def _parent_key_unique(self, parent_tm: TriplesMap, parent_keys: tuple) -> bool:
@@ -1949,15 +1860,24 @@ class MappingPlanner:
             _term_refs(om, tm.func_maps, refs)
         return refs
 
-    def _join_key_expr(self, df: DataFrame, key: str, layers=None):
+    def _join_key_expr(self, df: DataFrame, key: str, layers=None) -> str:
         """Join keys may be plain column references or templates
         (templated join conditions, semantify.py:528-535)."""
         if "{" in key:
             return compile_template(df, key, encode=False, layers=layers).expr
-        raw = canonical_string(df, key)
-        if layers is not None:
-            raw = layers.add(0, ("canon", key), raw)
-        return raw
+        return _canon(df, key, layers)
+
+    def _key_subject_pairs(self, pdf, parent_tm, parent_keys, names):
+        """(``__po`` = parent subject, key columns ``names``) rows of a
+        parent scan with a valid subject and valid keys."""
+        players = ExprLayers()
+        psub = compile_term_map(pdf, parent_tm.subject.term, "subject",
+                                base=self.base, layers=players)
+        pkey_exprs = [self._join_key_expr(pdf, k, players) for k in parent_keys]
+        return players.apply(pdf).where(psub.valid).selectExpr(
+            f"{psub.expr} AS __po",
+            *[f"{k} AS {n}" for k, n in zip(pkey_exprs, names)],
+        ).where(_all_valid(names))
 
     def _parent_pairs(self, parent_tm: TriplesMap, parent_keys: tuple) -> DataFrame:
         """Distinct (key…, subject) pairs of the parent TM — the Spark
@@ -1972,17 +1892,9 @@ class MappingPlanner:
         cache_key = (parent_tm.tm_id, parent_keys)
         if cache_key in self._parent_cache:
             return self._parent_cache[cache_key]
-        pdf = self.parent_scan(parent_tm)
-        players = ExprLayers()
-        psub = compile_term_map(pdf, parent_tm.subject.term, "subject",
-                                base=self.base, layers=players)
-        pkey_exprs = [self._join_key_expr(pdf, k, players) for k in parent_keys]
-        sel = players.apply(pdf).where(psub.valid).select(
-            psub.expr.alias("__po"),
-            *[k.alias(f"__pk{i}") for i, k in enumerate(pkey_exprs)],
-        )
-        for i in range(len(parent_keys)):
-            sel = sel.where(valid_value(F.col(f"__pk{i}")))
+        sel = self._key_subject_pairs(
+            self.parent_scan(parent_tm), parent_tm, parent_keys,
+            [f"__pk{i}" for i in range(len(parent_keys))])
         # raw-unique keys ⇒ (key, subject) pairs are already distinct —
         # skip the build-side dedup shuffle (the duckdb footer probe is
         # cached; string/float keys stay conservative and dedup)

@@ -1,12 +1,17 @@
-"""Term-map → native Spark Column compilation.
+"""Term-map → Spark SQL expression text.
 
 This is the replacement for the reference's row-at-a-time
 ``string_substitution`` interpreter (reference:
 rdfizer/rdfizer/functions.py:1775-1965) and the term-type/datatype
 decoration logic (reference: rdfizer/rdfizer/semantify.py:6328-6381,
-6794-6885). Everything compiles to built-in Column expressions so Catalyst
-sees the whole plan and whole-stage codegen applies — no Python in the hot
-path.
+6794-6885). Every term compiles to SQL expression text over built-in
+functions; the planner hands each layer of named subexpressions to one
+``selectExpr`` (one parse per layer instead of one py4j round trip per
+Column operation), so Catalyst sees the whole plan and whole-stage codegen
+applies — no Python in the hot path.
+
+String literals are quoted with ``ops._exprs._sql_str`` and column
+references with ``_ident`` — the only two quoting rules the SQL text uses.
 
 Semantics preserved from the reference:
   * NULL-ish values — ``None``/``"nan"``/``"N/A"``/``"None"``/``"NULL"`` or
@@ -28,11 +33,10 @@ import re
 from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .._memo import BoundedMemo
 from ..ir import CONSTANT, REFERENCE, TEMPLATE, TermMap, TT_BLANKNODE, TT_IRI, TT_LITERAL, TT_UNSAFE_IRI
+from ..ops._exprs import _sql_str
 
 XSD = "http://www.w3.org/2001/XMLSchema#"
 DEFAULT_BASE = "http://example.com/base/"
@@ -41,45 +45,21 @@ _NULLISH = ("nan", "N/A", "None", "NULL")
 
 _TEMPLATE_REF_RE = re.compile(r"(?<!\\)\{(.+?)(?<!\\)\}")
 
-# ---------------------------------------------------------------------------
-# Expression-tree memo (r10, guide §1.2 step 2: every Column operation is one
-# py4j round trip; a 10-TriplesMap compile builds ~7,600 of them = ~2 s of
-# driver latency). Columns are immutable name-bound expression trees, so any
-# builder whose OUTPUT depends only on hashable scalars (a column-name
-# string, a literal value, flags) can hand out one shared tree for the
-# process lifetime — the same reuse contract as ops.dedup._doc_index_exprs
-# and ops._exprs.lit_array. Keys fully describe the tree, so a racing
-# duplicate build under the compile thread pool writes an identical value;
-# trees referencing LAYER names (__x0_1 …) are memoized by that name alone
-# on purpose: two TriplesMaps may bind the same layer name to different
-# inputs, but the returned tree is the same unresolved-attribute tree either
-# way — resolution happens per-plan, not at construction.
-# bounded (r11, ADVICE #4): every distinct constant literal/template
-# fragment ever compiled adds an entry, a slow leak in a long-lived
-# service; LRU eviction only costs rebuilding an identical tree
-_TREE_MEMO: dict = BoundedMemo(4096)
+NULL_STRING = "CAST(NULL AS STRING)"
+EMPTY_ARRAY = "CAST(array() AS ARRAY<STRING>)"
 
 
-def _memo_tree(key: tuple, build) -> Column:
-    col = _TREE_MEMO.get(key)
-    if col is None:
-        col = _TREE_MEMO[key] = build()
-    return col
+def _ident(ref: str, exact: bool = True) -> str:
+    """SQL identifier for a column reference: an exact column name is one
+    backtick-quoted part (so names with dots, spaces or backticks stay one
+    column); a nested ref splits on dots into quoted struct-field parts."""
+    parts = [ref] if exact else ref.split(".")
+    return ".".join("`" + p.replace("`", "``") + "`" for p in parts)
 
 
-def _lit(v) -> Column:
-    """Memoized ``F.lit`` for plan-constant scalars (a multi-TM compile
-    was measured issuing ~1,000 lit() round trips)."""
-    return _memo_tree(("lit", type(v).__name__, v), lambda: F.lit(v))
-
-
-def _col(name: str) -> Column:
-    """Memoized ``F.col`` — every name-bound attribute reference is one
-    py4j round trip, and the same names (layer columns ``__x0_1``…,
-    struct fields ``__t.p``…) recur across TriplesMaps and compiles
-    (r11; the same unresolved-attribute reuse contract as the layer
-    trees in ``_TREE_MEMO``)."""
-    return _memo_tree(("col", name), lambda: F.col(name))
+def opt_str(v: str | None) -> str:
+    """A nullable STRING literal."""
+    return NULL_STRING if v is None else _sql_str(v)
 
 
 def template_references(template: str) -> list[str]:
@@ -93,7 +73,7 @@ _INLINE_PRED_RE = re.compile(
 )
 
 
-def _inline_predicate(df: DataFrame, ref: str) -> Column | None:
+def _inline_predicate(df: DataFrame, ref: str) -> str | None:
     """``field[?(@.attr=='v')].out`` — inline JSON predicate on a reference
     (reference: functions.py:1820-1864): filter an array-of-structs column
     by an equality/inequality on a (dotted) member, project ``out`` from
@@ -101,32 +81,37 @@ def _inline_predicate(df: DataFrame, ref: str) -> Column | None:
     m = _INLINE_PRED_RE.match(ref)
     if m is None:
         return None
-    base, path, op, val, fld = (m.group("base"), m.group("path"),
-                                m.group("op"), m.group("val"), m.group("field"))
-
-    def get(x: Column, dotted: str) -> Column:
-        for seg in dotted.split("."):
-            x = x.getField(seg)
-        return x
-
+    b, path, fld = (_ident(m.group(g), exact=False) for g in ("base", "path", "field"))
     try:
-        dtype = df.select(F.col(base)).schema[0].dataType
+        dtype = df.selectExpr(b).schema[0].dataType
     except Exception:
         return None
-    if dtype.typeName() == "array":
-        cond = (lambda x: get(x, path).cast("string") == F.lit(val)) if op == "==" \
-            else (lambda x: get(x, path).cast("string") != F.lit(val))
-        filtered = F.filter(F.col(base), cond)
-        # F.get is NULL on out-of-bounds (ANSI-safe) — empty ⇒ NULL ⇒ drop
-        elem = F.get(filtered, F.size(filtered) - 1)
-        return get(elem, fld).cast("string")
+    test = f"{'=' if m.group('op') == '==' else '!='} {_sql_str(m.group('val'))}"
+    if isinstance(dtype, T.ArrayType):
+        filtered = f"filter({b}, __e -> CAST(__e.{path} AS STRING) {test})"
+        # get is NULL on out-of-bounds (ANSI-safe) — empty ⇒ NULL ⇒ drop
+        elem = f"get({filtered}, size({filtered}) - 1)"
+        return f"CAST(({elem}).{fld} AS STRING)"
     # scalar struct: conditional projection
-    hit = get(F.col(base), path).cast("string")
-    test = (hit == F.lit(val)) if op == "==" else (hit != F.lit(val))
-    return F.when(test, get(F.col(base), fld).cast("string"))
+    return f"CASE WHEN CAST({b}.{path} AS STRING) {test} THEN CAST({b}.{fld} AS STRING) END"
 
 
-def canonical_string(df: DataFrame, ref: str) -> Column:
+# regex literals of the float canonicalization
+_FLOATISH = _sql_str(r"^-?\d+\.\d+$")
+_TRAIL0 = _sql_str(r"(\.\d*?)0+$")
+_TRAILDOT = _sql_str(r"\.$")
+_MANTISSA = _sql_str(r"^(-?\d+(?:\.\d+)?)[eE]")
+_DOT0 = _sql_str(r"\.0$")
+_EXPONENT = _sql_str(r"[eE]([+-]?\d+)$")
+
+
+def _float_canon(s: str) -> str:
+    """Float-looking strings (``_FLOATISH``) → ``repr(float())`` form."""
+    canon = f"regexp_replace(regexp_replace({s}, {_TRAIL0}, '$1'), {_TRAILDOT}, '.0')"
+    return f"CASE WHEN {s} RLIKE {_FLOATISH} THEN {canon} ELSE {s} END"
+
+
+def canonical_string(df: DataFrame, ref: str) -> str:
     """A column rendered to its canonical string form.
 
     Matches the reference's row model where every value is a string
@@ -137,25 +122,15 @@ def canonical_string(df: DataFrame, ref: str) -> Column:
     """
     inline = _inline_predicate(df, ref)
     if inline is not None:
-        floatish = inline.rlike(r"^-?\d+\.\d+$")
-        canon = F.regexp_replace(inline, r"(\.\d*?)0+$", r"$1")
-        canon = F.regexp_replace(canon, r"\.$", ".0")
-        return F.when(floatish, canon).otherwise(inline)
-
-    dtype = dict(df.dtypes).get(ref)
-    # the remaining tree depends only on (ref, dtype, exact-column?) —
-    # share one tree per combination across TMs/queries (_TREE_MEMO note)
-    return _memo_tree(("canon", ref, dtype, ref in df.columns),
-                      lambda: _canonical_core(ref, dtype, ref in df.columns))
+        return _float_canon(inline)
+    return _canonical_core(ref, dict(df.dtypes).get(ref), ref in df.columns)
 
 
-def _canonical_core(ref: str, dtype: str | None, exact: bool) -> Column:
-    if exact:
-        # exact column: backtick-quote so names with dots (XML parent-axis
-        # refs like "../@id") aren't parsed as struct field access
-        col = F.col("`" + ref.replace("`", "``") + "`")
-    else:
-        col = F.col(ref)  # nested struct access via dots
+def _canonical_core(ref: str, dtype: str | None, exact: bool) -> str:
+    # exact column: one quoted part, so names with dots (XML parent-axis
+    # refs like "../@id") aren't parsed as struct field access; otherwise
+    # nested struct access via dots
+    col = _ident(ref, exact)
 
     if dtype in ("double", "float"):
         # decimal-cast → trim trailing zeros, keep >=1 fractional digit:
@@ -169,87 +144,76 @@ def _canonical_core(ref: str, dtype: str | None, exact: bool) -> Column:
         # Rendering is always VALUE-EXACT (float(s) == v, property-tested);
         # notation diverges from repr() only in [1e-10, 1e-4), where repr
         # switches to E-notation and this stays plain-decimal.
-        dec = F.col(ref).try_cast(T.DecimalType(38, 10))
-        s = dec.cast("string")
-        s = F.regexp_replace(s, r"(\.\d*?)0+$", r"$1")
-        s = F.regexp_replace(s, r"\.$", ".0")
-        plain = F.col(ref).cast("string")
-        mant = F.regexp_replace(
-            F.regexp_extract(plain, r"^(-?\d+(?:\.\d+)?)[eE]", 1), r"\.0$", "")
-        exp = F.regexp_extract(plain, r"[eE]([+-]?\d+)$", 1).cast("int")
+        dec = f"try_cast({col} AS DECIMAL(38,10))"
+        s = f"regexp_replace(CAST({dec} AS STRING), {_TRAIL0}, '$1')"
+        s = f"regexp_replace({s}, {_TRAILDOT}, '.0')"
+        plain = f"CAST({col} AS STRING)"
+        mant = f"regexp_replace(regexp_extract({plain}, {_MANTISSA}, 1), {_DOT0}, '')"
+        exp = f"CAST(regexp_extract({plain}, {_EXPONENT}, 1) AS INT)"
         # Python pads exponents to TWO digits minimum but never truncates
         # (repr(1e100) == '1e+100'); lpad(…, 2, '0') silently truncated
         # three-digit exponents to a 10^90-off value (hypothesis r2)
-        expdigits = F.abs(exp).cast("string")
-        expdigits = F.when(F.length(expdigits) < 2,
-                           F.concat(F.lit("0"), expdigits)).otherwise(expdigits)
-        sci = F.concat(mant, F.lit("e"),
-                       F.when(exp < 0, F.lit("-")).otherwise(F.lit("+")),
-                       expdigits)
-        fallback = F.when(plain.rlike("[eE]"), sci).otherwise(plain)
-        exact = dec.isNotNull() & (dec.cast("double") == F.col(ref).cast("double"))
-        return F.when(exact, s).otherwise(fallback)
+        digits = f"CAST(abs({exp}) AS STRING)"
+        digits = f"CASE WHEN length({digits}) < 2 THEN concat('0', {digits}) ELSE {digits} END"
+        sci = f"concat({mant}, 'e', CASE WHEN {exp} < 0 THEN '-' ELSE '+' END, {digits})"
+        fallback = f"CASE WHEN {plain} RLIKE '[eE]' THEN {sci} ELSE {plain} END"
+        exact_dec = f"{dec} IS NOT NULL AND CAST({dec} AS DOUBLE) = CAST({col} AS DOUBLE)"
+        return f"CASE WHEN {exact_dec} THEN {s} ELSE {fallback} END"
     if dtype == "boolean":
-        return F.when(col, F.lit("True")).when(~col, F.lit("False"))
+        return f"CASE WHEN {col} THEN 'True' WHEN NOT {col} THEN 'False' END"
     if dtype == "string":
-        # float-string canonicalization: "^-?\d+(?:\.\d+)$" → repr(float())
-        floatish = col.rlike(r"^-?\d+\.\d+$")
-        canon = F.regexp_replace(col, r"(\.\d*?)0+$", r"$1")
-        canon = F.regexp_replace(canon, r"\.$", ".0")
-        return F.when(floatish, canon).otherwise(col)
-    return col.cast("string")
+        return _float_canon(col)
+    return f"CAST({col} AS STRING)"
 
 
-def valid_value(col: Column) -> Column:
+def valid_value(x: str) -> str:
     """True when the value is usable (reference NULL semantics,
     functions.py:1882-1912): non-null, not a NULL-marker string, not
     whitespace-only."""
-    return col.isNotNull() & ~col.isin(*_NULLISH) & (F.trim(col) != "")
+    markers = ", ".join(_sql_str(v) for v in _NULLISH)
+    return f"({x} IS NOT NULL AND {x} NOT IN ({markers}) AND trim({x}) != '')"
 
 
-def encode_iri_component(col: Column) -> Column:
+# java.net.URLEncoder (form encoding) → urllib.parse.quote(v,
+# safe='_-.~:@=+%'): space→%20 (not '+'), keep ``~ : @ = + %``
+# unencoded, encode ``*``; '%25' last so a literal '%' is un-encoded
+IRI_FIXUPS = (("+", "%20"), ("%2B", "+"), ("%7E", "~"), ("%3A", ":"),
+              ("%40", "@"), ("%3D", "="), ("*", "%2A"), ("%25", "%"))
+
+
+def encode_iri_component(x: str) -> str:
     """Percent-encode like ``urllib.parse.quote(v, safe='_-.~:@=+%')``
-    (reference functions.py:580-582) using only JVM-side expressions.
-
-    ``F.url_encode`` is java.net.URLEncoder (form encoding); we post-fix the
-    differences: space→%20 (not '+'), keep ``~ : @ = + %`` unencoded,
-    encode ``*``.
-    """
-    c = F.url_encode(col)
-    c = F.replace(c, F.lit("+"), F.lit("%20"))      # URLEncoder space → '+'
-    c = F.replace(c, F.lit("%2B"), F.lit("+"))
-    c = F.replace(c, F.lit("%7E"), F.lit("~"))
-    c = F.replace(c, F.lit("%3A"), F.lit(":"))
-    c = F.replace(c, F.lit("%40"), F.lit("@"))
-    c = F.replace(c, F.lit("%3D"), F.lit("="))
-    c = F.replace(c, F.lit("*"), F.lit("%2A"))
-    c = F.replace(c, F.lit("%25"), F.lit("%"))      # last: un-encode literal '%'
-    return c
+    (reference functions.py:580-582) using only JVM-side expressions:
+    ``url_encode`` plus the ``IRI_FIXUPS`` rewrites."""
+    out = f"url_encode({x})"
+    for a, b in IRI_FIXUPS:
+        out = f"replace({out}, {_sql_str(a)}, {_sql_str(b)})"
+    return out
 
 
 @dataclass
 class CompiledValue:
-    """A lexical value expression + its row-validity condition.
+    """SQL text of a lexical value + its row-validity condition.
 
     ``core``/``suffix`` (optional) factor the rendered term into a
     per-row part and a CONSTANT tail, i.e. ``expr == concat(core,
-    lit(suffix))``. Narrow dedup keys on ``core`` alone and re-attaches
+    suffix)``. Narrow dedup keys on ``core`` alone and re-attaches
     the suffix after the shuffle — a literal's `^^<datatype>` decoration
     is ~47 bytes/row that would otherwise ride (and spill) the dedup
     hash for no information. Appending a fixed-per-entry suffix is
     injective, so dedup on the core is exact."""
 
-    expr: Column
-    valid: Column
-    core: Column | None = None
+    expr: str
+    valid: str
+    core: str | None = None
     suffix: str | None = None
 
 
 class ExprLayers:
     """Named-subexpression builder.
 
-    Term constructors branch on their own inputs (``when(v.contains(
-    "http"), v).otherwise(encode(v))``), which at the Column level
+    Term constructors branch on their own inputs (``CASE WHEN
+    contains(v, 'http') THEN v ELSE encode(v) END``), which inlined
     DUPLICATES the input expression in every branch — nested over
     templates and IRI completion this grows combinatorially (observed:
     a 2-ref subject template expanded to >20 copies of the per-ref
@@ -257,36 +221,39 @@ class ExprLayers:
     each intermediate as a named column in layered projections makes
     every reuse a cheap attribute reference; Catalyst's CollapseProject
     keeps non-trivial aliases that are referenced more than once.
+
+    An entry may only reference columns of lower layers. Entries are SQL
+    text; FNML results arrive as Columns (the builders' contract).
     """
 
     def __init__(self) -> None:
-        self.layers: list[dict[str, Column]] = [{}, {}, {}]
-        self._memo: dict = {}
-        self._n = 0
+        self.layers: list[dict[str, str | Column]] = []
+        self._names: dict = {}
 
-    def add(self, level: int, key, col: Column) -> Column:
-        memo_key = (level, key)
-        if memo_key in self._memo:
-            return _col(self._memo[memo_key])
-        self._n += 1
-        name = f"__x{level}_{self._n}"
-        self.layers[level][name] = col
-        self._memo[memo_key] = name
-        return _col(name)
-
-    def name_of(self, level: int, key) -> str | None:
-        """Registered layer-column name for a key (the _TREE_MEMO key
-        component for trees built on top of this layer reference)."""
-        return self._memo.get((level, key))
+    def add(self, level: int, key, expr: str | Column) -> str:
+        """Register ``expr`` under ``key`` at ``level``; returns the
+        column name that references it (the first registration wins)."""
+        name = self._names.get((level, key))
+        if name is None:
+            while len(self.layers) <= level:
+                self.layers.append({})
+            name = f"__x{level}_{len(self._names) + 1}"
+            self.layers[level][name] = expr
+            self._names[(level, key)] = name
+        return name
 
     def apply(self, df: DataFrame) -> DataFrame:
         for layer in self.layers:
-            if layer:
-                df = df.withColumns(layer)
+            sql = [f"{e} AS {n}" for n, e in layer.items() if isinstance(e, str)]
+            cols = {n: e for n, e in layer.items() if not isinstance(e, str)}
+            if sql:
+                df = df.selectExpr("*", *sql)
+            if cols:
+                df = df.withColumns(cols)
         return df
 
 
-def _canon(df: DataFrame, ref: str, layers: ExprLayers | None) -> Column:
+def _canon(df: DataFrame, ref: str, layers: ExprLayers | None) -> str:
     raw = canonical_string(df, ref)
     if layers is not None:
         raw = layers.add(0, ("canon", ref), raw)
@@ -303,55 +270,34 @@ def compile_template(
     percent-encoded iff the template text before the placeholder contains
     "http" and the value itself doesn't.
     """
-    parts: list[Column] = []
-    valid = _lit(True)
+    parts: list[str] = []
+    valid: list[str] = []
     pos = 0
     seen_http = False
     for m in _TEMPLATE_REF_RE.finditer(template):
         lit = template[pos : m.start()].replace(r"\{", "{").replace(r"\}", "}")
         if lit:
-            parts.append(_lit(lit))
+            parts.append(_sql_str(lit))
         seen_http = seen_http or ("http" in template[: m.start()])
-        ref = m.group(1).split("[")[0] if "[" not in m.group(1) else m.group(1)
+        ref = m.group(1)
         raw = _canon(df, ref, layers)
-        rkey = _layer_key(layers, 0, ("canon", ref))
         do_encode = encode and seen_http
-        if rkey is not None:
-            # valid/value chains over a layer reference depend only on
-            # that name + flags — share one tree (_TREE_MEMO note)
-            valid = valid & _memo_tree(("valid", rkey),
-                                       lambda: valid_value(raw))
-            v = _memo_tree(("tv", rkey, do_encode),
-                           lambda: _template_value(raw, do_encode))
-        else:
-            valid = valid & valid_value(raw)
-            v = _template_value(raw, do_encode)
+        valid.append(valid_value(raw))
+        v = f"trim({raw})"
+        if do_encode:
+            v = f"CASE WHEN contains({v}, 'http') THEN {v} ELSE {encode_iri_component(v)} END"
         if layers is not None:
             v = layers.add(1, ("tv", ref, do_encode), v)
         parts.append(v)
         pos = m.end()
     tail = template[pos:].replace(r"\{", "{").replace(r"\}", "}")
     if tail:
-        parts.append(_lit(tail))
-    if not parts:
-        parts = [_lit("")]
-    return CompiledValue(expr=F.concat(*parts), valid=valid)
+        parts.append(_sql_str(tail))
+    return CompiledValue(expr=f"concat({', '.join(parts or [_sql_str('')])})",
+                         valid=f"({' AND '.join(valid or ['true'])})")
 
 
-def _template_value(raw: Column, do_encode: bool) -> Column:
-    v = F.trim(raw)
-    if do_encode:
-        v = F.when(v.contains("http"), v).otherwise(encode_iri_component(v))
-    return v
-
-
-def _layer_key(layers: ExprLayers | None, level: int, key) -> str | None:
-    """_TREE_MEMO key component for a layer-registered reference: the
-    registered name (trees over ``F.col(name)`` depend only on it), or
-    None when unlayered — callers then build fresh, unmemoized trees."""
-    if layers is None:
-        return None
-    return layers.name_of(level, key)
+_DQUOTE, _SQUOTE = _sql_str('"'), _sql_str("'")
 
 
 def compile_reference(
@@ -359,71 +305,54 @@ def compile_reference(
     layers: ExprLayers | None = None,
 ) -> CompiledValue:
     raw = _canon(df, ref, layers)
-    rkey = _layer_key(layers, 0, ("canon", ref))
-    if rkey is not None:
-        valid = _memo_tree(("valid", rkey), lambda: valid_value(raw))
-        v = _memo_tree(("rv", rkey, for_literal),
-                       lambda: _reference_value(raw, for_literal))
-    else:
-        valid = valid_value(raw)
-        v = _reference_value(raw, for_literal)
+    v = f"trim({raw})"
+    if for_literal:
+        v = f"replace({v}, {_DQUOTE}, {_SQUOTE})"   # functions.py:1950
     if layers is not None:
         v = layers.add(1, ("rv", ref, for_literal), v)
-    return CompiledValue(expr=v, valid=valid)
+    return CompiledValue(expr=v, valid=valid_value(raw))
 
 
-def _reference_value(raw: Column, for_literal: bool) -> Column:
-    v = F.trim(raw)
-    if for_literal:
-        v = F.replace(v, F.lit('"'), F.lit("'"))   # functions.py:1950
-    return v
+# N-Triples literal-body escapes; the reference emits raw strings (only
+# ``"``→``'`` on references), escaping control characters keeps the
+# output valid N-Triples — a strict superset of valid outputs on clean data
+_NT_ESCAPES = (("\\", "\\\\"), ("\n", "\\n"), ("\r", "\\r"), ("\t", "\\t"))
 
 
-def _nt_escape_literal(col: Column) -> Column:
-    """Escape backslash/newline/CR/tab for N-Triples literal bodies.
-
-    The reference emits raw strings (only ``"``→``'``); we additionally
-    escape control characters so the output is always valid N-Triples —
-    a strict superset of valid outputs on clean data.
-    """
-    c = F.replace(col, F.lit("\\"), F.lit("\\\\"))
-    c = F.replace(c, F.lit("\n"), F.lit("\\n"))
-    c = F.replace(c, F.lit("\r"), F.lit("\\r"))
-    c = F.replace(c, F.lit("\t"), F.lit("\\t"))
-    return c
+def _nt_escape_literal(x: str) -> str:
+    """Escape backslash/newline/CR/tab for N-Triples literal bodies."""
+    for a, b in _NT_ESCAPES:
+        x = f"replace({x}, {_sql_str(a)}, {_sql_str(b)})"
+    return x
 
 
-def wrap_iri(value: Column, *, base: str | None = None) -> Column:
+def wrap_iri(value: str, *, base: str | None = None) -> str:
     """IRI term completion (semantify.py:6334-6350): values without "http"
     get the base IRI prepended (encoded under the default base)."""
     b = base if base else DEFAULT_BASE
-    completed = F.when(value.contains("http"), value).otherwise(
-        F.concat(F.lit(b), value if base else encode_iri_component(value))
-    )
-    return F.concat(F.lit("<"), completed, F.lit(">"))
+    rel = value if base else encode_iri_component(value)
+    return (f"concat('<', CASE WHEN contains({value}, 'http') THEN {value} "
+            f"ELSE concat({_sql_str(b)}, {rel}) END, '>')")
 
 
-def wrap_blank(value: Column) -> Column:
+def wrap_blank(value: str) -> str:
     """Blank-node term (semantify.py:6354-6367)."""
-    v = F.replace(value, F.lit("/"), F.lit("2F"))
-    v = encode_iri_component(v)
-    v = F.replace(v, F.lit("%"), F.lit(""))
-    v = F.replace(v, F.lit("."), F.lit("2E"))
-    return F.concat(F.lit("_:"), v)
+    v = encode_iri_component(f"replace({value}, '/', '2F')")
+    return f"concat('_:', replace(replace({v}, '%', ''), '.', '2E'))"
 
 
-def wrap_literal(value: Column, datatype: Column | None, language: Column | None,
-                 *, datatype_nullable: bool = False) -> Column:
+def wrap_literal(value: str, datatype: str | None, language: str | None,
+                 *, datatype_nullable: bool = False) -> str:
     """Literal term with optional datatype/language decoration
     (semantify.py:6794-6885). ``datatype_nullable`` keeps the plain
     literal when a per-row inferred datatype is NULL (value sniffing)."""
-    body = F.concat(F.lit('"'), _nt_escape_literal(value), F.lit('"'))
+    body = f"concat('\"', {_nt_escape_literal(value)}, '\"')"
     if language is not None:
-        return F.concat(body, F.lit("@"), language)
+        return f"concat({body}, '@', {language})"
     if datatype is not None:
-        decorated = F.concat(body, F.lit("^^<"), datatype, F.lit(">"))
+        decorated = f"concat({body}, '^^<', {datatype}, '>')"
         if datatype_nullable:
-            return F.when(datatype.isNull(), body).otherwise(decorated)
+            return f"CASE WHEN {datatype} IS NULL THEN {body} ELSE {decorated} END"
         return decorated
     return body
 
@@ -448,7 +377,7 @@ def natural_datatype(df: DataFrame, ref: str) -> str | None:
     return _NATURAL_DT.get(base)
 
 
-def sniff_datatype(value: Column) -> tuple[Column, Column]:
+def sniff_datatype(value: str) -> tuple[str, str]:
     """Per-row value-sniffed (value, datatype IRI) for STRING sources —
     the reference's is_convertible_to_int / is_bool /
     is_convertible_to_double / is_date / is_datetime chain
@@ -456,25 +385,21 @@ def sniff_datatype(value: Column) -> tuple[Column, Column]:
     datatype > integer > boolean > double > date > dateTime > plain).
     Booleans lower-case the lexical form like the reference. Runs as one
     whole-stage-codegen CASE chain, no UDF."""
-    lower = F.lower(value)
-    is_int = value.rlike(r"^[+-]?[0-9]+$")
-    is_bool = lower.isin("true", "false")
-    is_double = value.try_cast("double").isNotNull()
+    lower = f"lower({value})"
+    is_int = f"{value} RLIKE '^[+-]?[0-9]+$'"
+    is_bool = f"{lower} IN ('true', 'false')"
+    is_double = f"try_cast({value} AS DOUBLE) IS NOT NULL"
     # cheap regex prefilter so the expensive date/timestamp casts only
     # run on date-shaped values, not every plain string in the corpus
-    datish = value.rlike(r"^[0-9]{4}-[0-9]{2}-[0-9]{2}")
-    is_date = datish & value.rlike(r"^[0-9]{4}-[0-9]{2}-[0-9]{2}$") \
-        & value.try_cast("date").isNotNull()
-    is_dt = datish & F.replace(value, F.lit(" T"), F.lit("T")) \
-        .try_cast("timestamp").isNotNull()
-    dt = (
-        F.when(is_int, F.lit(XSD + "integer"))
-        .when(is_bool, F.lit(XSD + "boolean"))
-        .when(is_double, F.lit(XSD + "double"))
-        .when(is_date, F.lit(XSD + "date"))
-        .when(is_dt, F.lit(XSD + "dateTime"))
-    )
-    out_value = F.when(~is_int & is_bool, lower).otherwise(value)
+    datish = f"{value} RLIKE '^[0-9]{{4}}-[0-9]{{2}}-[0-9]{{2}}'"
+    is_date = (f"({datish} AND {value} RLIKE '^[0-9]{{4}}-[0-9]{{2}}-[0-9]{{2}}$' "
+               f"AND try_cast({value} AS DATE) IS NOT NULL)")
+    is_dt = (f"({datish} AND try_cast(replace({value}, ' T', 'T') AS TIMESTAMP) "
+             f"IS NOT NULL)")
+    dt = (f"CASE WHEN {is_int} THEN '{XSD}integer' WHEN {is_bool} THEN '{XSD}boolean' "
+          f"WHEN {is_double} THEN '{XSD}double' WHEN {is_date} THEN '{XSD}date' "
+          f"WHEN {is_dt} THEN '{XSD}dateTime' END")
+    out_value = f"CASE WHEN NOT ({is_int}) AND {is_bool} THEN {lower} ELSE {value} END"
     return out_value, dt
 
 
@@ -488,7 +413,7 @@ def compile_term_map(
     func_maps: dict | None = None,
     layers: ExprLayers | None = None,
 ) -> CompiledValue:
-    """Compile a non-join term map into an N-Triples term Column.
+    """Compile a non-join term map into the SQL text of an N-Triples term.
 
     ``position`` ∈ {subject, predicate, object, graph, datatype, language}.
     Returns the fully-wrapped term (``<iri>`` / ``_:b`` / ``"lit"...``).
@@ -507,7 +432,7 @@ def compile_term_map(
         fm = (func_maps or {}).get(tm.value)
         if fm is None:
             raise ValueError(f"unresolved function map {tm.value!r}")
-        cv = compile_function(df, fm, func_maps or {}, base=base, layers=layers)
+        cv = compile_function(df, fm, func_maps or {}, layers=layers)
     else:
         raise NotImplementedError(f"term map kind {tm.kind} must be handled by the planner")
 
@@ -521,82 +446,59 @@ def compile_term_map(
         else:
             tt = TT_LITERAL if tm.kind in (REFERENCE, "function") else TT_IRI
 
-    ckey = None
-    if layers is not None:
+    if layers is not None and tm.kind == TEMPLATE:
         # name the lexical value so the term wrappers below (whose branches
-        # repeat it, e.g. wrap_iri's 3 uses) reference one computed column
-        lk = ("cv", tm.kind, tm.value, _is_literal_position(tm, position))
-        expr = layers.add(2, lk, cv.expr)
-        cv = CompiledValue(expr, cv.valid)
-        ckey = _layer_key(layers, 2, lk)
-
-    def _wrap(tag: tuple, build) -> Column:
-        # term wrappers over the layer reference depend only on its name
-        # + plan constants — share one tree (_TREE_MEMO note)
-        if ckey is None:
-            return build()
-        return _memo_tree((*tag, ckey), build)
+        # repeat it, e.g. wrap_iri's 3 uses) reference one computed column;
+        # reference values and function results are layer columns already
+        cv = CompiledValue(layers.add(2, ("cv", tm.value), cv.expr), cv.valid)
 
     if tt == TT_BLANKNODE:
-        return CompiledValue(_wrap(("blank",), lambda: wrap_blank(cv.expr)),
-                             cv.valid)
+        return CompiledValue(wrap_blank(cv.expr), cv.valid)
     if tt == TT_UNSAFE_IRI:
-        return CompiledValue(
-            _wrap(("unsafe",), lambda: F.concat(
-                F.lit("<"), F.url_decode(cv.expr), F.lit(">"))),
-            cv.valid)
+        return CompiledValue(f"concat('<', url_decode({cv.expr}), '>')", cv.valid)
     if tt == TT_IRI:
-        return CompiledValue(
-            _wrap(("iri", base), lambda: wrap_iri(cv.expr, base=base)),
-            cv.valid)
+        return CompiledValue(wrap_iri(cv.expr, base=base), cv.valid)
 
     # Literal: resolve datatype / language (constant or map-valued)
-    dt_col = lang_col = None
+    dt = lang = None
     valid = cv.valid
     # const_suffix: the decoration when it is a plan CONSTANT — lets
     # narrow dedup key on the bare body and re-attach the tail after the
     # shuffle ("" = undecorated; None = per-row decoration, can't split)
     const_suffix: str | None = ""
     if tm.language is not None:
-        lang_col = _lit(tm.language)
+        lang = _sql_str(tm.language)
         const_suffix = f"@{tm.language}"
     elif tm.language_map is not None:
         lcv = compile_term_map(df, tm.language_map, "language", base=base,
                                func_maps=func_maps, layers=layers)
-        lang_col, valid = lcv.expr, valid & lcv.valid
+        lang, valid = lcv.expr, f"({valid} AND {lcv.valid})"
         const_suffix = None
     elif tm.datatype is not None:
-        dt_col = _lit(tm.datatype)
+        dt = _sql_str(tm.datatype)
         const_suffix = f"^^<{tm.datatype}>"
     elif tm.datatype_map is not None:
         dcv = compile_term_map(df, tm.datatype_map, "datatype", base=base,
                                func_maps=func_maps, layers=layers)
-        dt_col, valid = dcv.expr, valid & dcv.valid
+        dt, valid = dcv.expr, f"({valid} AND {dcv.valid})"
         const_suffix = None
     elif infer_datatypes and tm.kind == REFERENCE:
         nd = natural_datatype(df, tm.value)
         if nd:
-            dt_col = _lit(nd)
+            dt = _sql_str(nd)
             const_suffix = f"^^<{nd}>"
         elif dict(df.dtypes).get(tm.value) == "string":
             # string source (CSV/XML/JSON text): per-row value sniffing
             # (reference functions.py:16-65)
             return CompiledValue(
-                _wrap(("snifflit",), lambda: wrap_literal(
-                    *sniff_datatype(cv.expr)[:2], None,
-                    datatype_nullable=True)),
+                wrap_literal(*sniff_datatype(cv.expr), None, datatype_nullable=True),
                 valid)
-    bare = _wrap(("lit0",), lambda: wrap_literal(cv.expr, None, None))
-    if const_suffix == "":
-        # undecorated literal: full == bare — one shared tree
-        return CompiledValue(bare, valid, core=bare, suffix="")
-    if const_suffix is not None:
-        # constant decoration: full = bare + suffix, memoizable
-        full = _wrap(("litsfx", const_suffix),
-                     lambda: wrap_literal(cv.expr, dt_col, lang_col))
-        return CompiledValue(full, valid, core=bare, suffix=const_suffix)
-    # per-row datatype/language column — not a plan constant, no memo
-    return CompiledValue(wrap_literal(cv.expr, dt_col, lang_col), valid)
+    full = wrap_literal(cv.expr, dt, lang)
+    if const_suffix is None:
+        # per-row datatype/language column — the term can't be split
+        return CompiledValue(full, valid)
+    return CompiledValue(full, valid, core=wrap_literal(cv.expr, None, None),
+                         suffix=const_suffix)
 
 
 def _is_literal_position(tm: TermMap, position: str) -> bool:
@@ -608,19 +510,22 @@ def _is_literal_position(tm: TermMap, position: str) -> bool:
 def _compile_constant(tm: TermMap, position: str) -> CompiledValue:
     v = tm.value
     if position in ("datatype", "language"):
-        return CompiledValue(_lit(v), _lit(True))
+        return CompiledValue(_sql_str(v), "true")
     if tm.constant_is_iri or position in ("subject", "predicate", "graph"):
         term = f"<{v}>"
     else:
         # constant-shortcut literal, possibly with "...@lang" suffix
-        # (reference parses it at semantify.py:6695-6713)
+        # (reference parses it at semantify.py:6695-6713); escaped here,
+        # in Python, like reference-valued bodies plus the quote itself
+        for a, b in (_NT_ESCAPES[0], ('"', '\\"'), *_NT_ESCAPES[1:]):
+            v = v.replace(a, b)
+        body = f'"{v}"'
         if tm.language:
-            term = f'"{v}"@{tm.language}'
+            term = f"{body}@{tm.language}"
         elif tm.datatype:
-            term = f'"{v}"^^<{tm.datatype}>'
+            term = f"{body}^^<{tm.datatype}>"
         else:
-            term = f'"{v}"'
+            term = body
     # a constant term is ALL suffix for narrow dedup — no reason to
     # carry its bytes through the shuffle when the entry index names it
-    return CompiledValue(_lit(term), _lit(True),
-                         core=_lit(""), suffix=term)
+    return CompiledValue(_sql_str(term), "true", core="''", suffix=term)

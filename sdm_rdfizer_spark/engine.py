@@ -45,20 +45,11 @@ def tune_session(spark: SparkSession) -> SparkSession:
     (new resolver + legacy fixed-point + comparison) on every plan; with
     the wide expression trees a compiled mapping produces, that costs tens
     of seconds per query — disable it and keep the legacy analyzer.
-
-    ``SPARK_GRAFT_SKIP_TUNE_KEYS`` (comma-separated conf keys) skips
-    individual settings — the A/B diagnostic hatch for attributing a
-    perf delta to one engine-wide knob in a fresh JVM (judge r8 ask #1);
-    never set in production.
     """
-    skip = {s for s in
-            os.environ.get("SPARK_GRAFT_SKIP_TUNE_KEYS", "").split(",") if s}
     # idempotent per session: callers invoke this defensively (every
     # read_parquet, every stream build) and each conf.set is a py4j
     # round trip — skip the ~10 of them when this session already ran
-    # with the same skip-set (r10; the set is tiny but per-query-build)
-    token = ("sdm_tuned", tuple(sorted(skip)))
-    if getattr(spark, "_sdm_tuned", None) == token:
+    if getattr(spark, "_sdm_tuned", False):
         return spark
     for k, v in {
         "spark.sql.analyzer.singlePassResolver.enabled": "false",
@@ -117,13 +108,11 @@ def tune_session(spark: SparkSession) -> SparkSession:
         "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning":
             "true",
     }.items():
-        if k in skip:
-            continue
         try:
             spark.conf.set(k, v)
         except Exception:
             pass
-    spark._sdm_tuned = token
+    spark._sdm_tuned = True
     return spark
 
 

@@ -41,9 +41,13 @@ def bool_to_term(col: Column) -> Column:
 
 
 def _encode_component(col: Column) -> Column:
-    from .compiler.terms import encode_iri_component
+    """The term compiler's IRI-component encoding over a Column."""
+    from .compiler.terms import IRI_FIXUPS
 
-    return encode_iri_component(col)
+    out = F.url_encode(col)
+    for a, b in IRI_FIXUPS:
+        out = F.replace(out, F.lit(a), F.lit(b))
+    return out
 
 
 # -- string ------------------------------------------------------------

@@ -281,7 +281,8 @@ def read_view(spark: SparkSession, view) -> DataFrame:
         elif f.kind == "reference":
             sel.append(_ref_expr(df, f.value).cast("string").alias(f.name))
         elif f.kind == "template":
-            sel.append(compile_template(df, f.value, encode=False).expr.alias(f.name))
+            sel.append(F.expr(compile_template(df, f.value, encode=False).expr)
+                       .alias(f.name))
         else:
             sel.append(F.lit(f.value).alias(f.name))
     for itf in it_fields:
@@ -319,7 +320,7 @@ def _view_key(df: DataFrame, key: str):
     from .compiler.terms import compile_template
 
     if "{" in key:
-        return compile_template(df, key, encode=False).expr
+        return F.expr(compile_template(df, key, encode=False).expr)
     return F.col(key)
 
 

@@ -145,7 +145,7 @@ def test_canonical_string_huge_and_precise_doubles(spark):
 
     df = spark.createDataFrame(
         [(1e30,), (-2.5e30,), (150.0,), (1234.56,), (None,)], "v double")
-    got = [r[0] for r in df.select(canonical_string(df, "v")).collect()]
+    got = [r[0] for r in df.selectExpr(canonical_string(df, "v")).collect()]
     assert got[0] == repr(1e30)          # "1e+30", no CAST_OVERFLOW
     assert got[1] == repr(-2.5e30)       # "-2.5e+30"
     assert got[2] == "150.0"

@@ -127,6 +127,40 @@ def test_template_encoding_and_quotes(spark, tmp_path):
     assert ("<http://x.org/e/x%2Fy>", "<http://x.org/name>", '"plain"') in got
 
 
+def test_constant_literals_are_escaped(spark, tmp_path):
+    """Constant literal objects get the same N-Triples escaping as
+    reference-valued ones: no raw line break, and the term reads back to
+    the constant (plain, language-tagged and datatyped)."""
+    from sdm_rdfizer_spark.sinks import parse_term
+
+    (tmp_path / "one.csv").write_text("id\n1\n")
+    const = 'line1\nline2 \\ back "q"'
+    body = r'"line1\nline2 \\ back \"q\""'
+    mapping = textwrap.dedent(f"""
+        @prefix rr: <http://www.w3.org/ns/r2rml#> .
+        @prefix rml: <http://semweb.mmlab.be/ns/rml#> .
+        @prefix ql: <http://semweb.mmlab.be/ns/ql#> .
+        @prefix xsd: <http://www.w3.org/2001/XMLSchema#> .
+        <#M> a rr:TriplesMap;
+          rml:logicalSource [ rml:source "{tmp_path}/one.csv"; rml:referenceFormulation ql:CSV ];
+          rr:subjectMap [ rr:template "http://x.org/e/{{id}}" ];
+          rr:predicateObjectMap [ rr:predicate <http://x.org/plain>; rr:object {body} ];
+          rr:predicateObjectMap [ rr:predicate <http://x.org/lang>;
+              rr:objectMap [ rr:constant {body}; rr:language "en" ] ];
+          rr:predicateObjectMap [ rr:predicate <http://x.org/typed>;
+              rr:objectMap [ rr:constant {body}; rr:datatype xsd:string ] ] .
+    """)
+    got = {p: o for _s, p, o in triple_set(materialize(spark, mapping))}
+    assert set(got) == {"<http://x.org/plain>", "<http://x.org/lang>",
+                        "<http://x.org/typed>"}
+    for o in got.values():
+        assert "\n" not in o and "\r" not in o
+        assert parse_term(o)["value"] == const
+    assert parse_term(got["<http://x.org/lang>"])["lang"] == "en"
+    assert parse_term(got["<http://x.org/typed>"])["datatype"] == \
+        "http://www.w3.org/2001/XMLSchema#string"
+
+
 def test_materialize_incremental_emits_only_delta(spark, tmp_path):
     """Incremental runs append only novel triples to the parquet state
     (reference hash_update analogue as a left_anti join)."""

@@ -362,3 +362,28 @@ def test_minhash_lsh_plan_rows(spark, entry, query):
     c = plan_counts(_plan(entry.queries()[query](spark, SF)))
     got = (c["keyed_shuffles"], c["broadcast_joins"], c["smj"])
     assert got == LSH_PLAN_ROWS[query], (query, got)
+
+
+def test_gtfs_tabular_build_py4j_calls(spark, entry):
+    """Building the 10-TriplesMap rml_gtfs_tabular mapping stays cheap on
+    the driver: terms compile to SQL text parsed once per layer, so a
+    build (after one untimed build caches the sources' metadata) sends at
+    most 600 py4j call commands. Column-tree compilation sent ~1,000
+    even with every tree memoized."""
+    build = entry.queries()["rml_gtfs_tabular"]
+    build(spark, SF)
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    calls = []   # list.append is atomic across the compile thread pool
+
+    def counting(command, *args, **kwargs):
+        if command.startswith("c\n"):   # call commands, not GC detaches
+            calls.append(1)
+        return send(command, *args, **kwargs)
+
+    client.send_command = counting
+    try:
+        build(spark, SF)
+    finally:
+        del client.send_command
+    assert len(calls) <= 600, len(calls)

@@ -29,7 +29,7 @@ def test_escape_unescape_roundtrip(spark, vals):
 
     df = spark.createDataFrame([(v,) for v in vals], "v string")
     out = df.select(
-        F.concat(F.lit('"'), _nt_escape_literal(F.col("v")), F.lit('"')).alias("t"),
+        F.concat(F.lit('"'), F.expr(_nt_escape_literal("v")), F.lit('"')).alias("t"),
         "v",
     ).collect()
     for r in out:
@@ -49,7 +49,7 @@ def test_canonical_double_matches_python_repr_roundtrip(spark, vals):
     from sdm_rdfizer_spark.compiler.terms import canonical_string
 
     df = spark.createDataFrame([(v,) for v in vals], "v double")
-    out = df.select(canonical_string(df, "v").alias("c"), "v").collect()
+    out = df.select(F.expr(canonical_string(df, "v")).alias("c"), "v").collect()
     for r in out:
         if r["c"] is None:
             continue
@@ -68,7 +68,7 @@ def test_iri_encoding_produces_parseable_terms(spark, vals):
     from sdm_rdfizer_spark.compiler.terms import encode_iri_component
 
     df = spark.createDataFrame([(v,) for v in vals], "v string")
-    out = df.select(encode_iri_component(F.col("v")).alias("e")).collect()
+    out = df.select(F.expr(encode_iri_component("v")).alias("e")).collect()
     for r in out:
         for ch in ' "<>\n\t':
             assert ch not in (r["e"] or "")
@@ -86,7 +86,7 @@ def test_iri_encoding_matches_reference_quote(spark, vals):
     from sdm_rdfizer_spark.compiler.terms import encode_iri_component
 
     df = spark.createDataFrame([(v,) for v in vals], "v string")
-    out = df.select("v", encode_iri_component(F.col("v")).alias("e")).collect()
+    out = df.select("v", F.expr(encode_iri_component("v")).alias("e")).collect()
     for r in out:
         assert r["e"] == quote(r["v"], safe="_-.~:@=+%"), r["v"]
 
